@@ -8,9 +8,10 @@ module is the Spark-native expression of that stage:
 - ``quality_features`` — ONE column-expression pass over the corpus
   producing the continuous per-doc signal vector plus a weak label
   (the strict heuristic gate). No Python, no shuffle.
-- ``fit_quality_classifier`` — MLlib ``LogisticRegression`` (JVM
-  distributed L-BFGS) on a deterministic hash-split of the weak-labeled
-  data; returns the fitted model and held-out AUC.
+- ``fit_quality_classifier`` — MLlib ``GBTClassifier`` (default) or
+  ``LogisticRegression`` (JVM distributed L-BFGS) on a deterministic
+  hash-split of the weak-labeled data; returns the fitted model and the
+  exact rank AUC of the holdout (``_rank_auc``).
 - ``score_quality`` — ``model.transform``: the fitted coefficients are
   broadcast and applied as a JVM column expression; scoring the full
   corpus is one map-only pass.
@@ -116,7 +117,9 @@ def fit_quality_classifier(
     Rows with ``xxhash64(id) % holdout_mod == 0`` are held out; the
     rest train. Returns ``(model, holdout_auc)``. The split is
     content-keyed (stable across retries/partitionings, same policy as
-    the engine's sampling/salting helpers).
+    the engine's sampling/salting helpers). Both branches return the
+    exact rank AUC of the holdout (``_rank_auc``), which does not
+    depend on the partition order.
 
     ``model_type``: ``"gbt"`` (default) fits gradient-boosted trees —
     the weak gate is a CONJUNCTION of threshold cuts (a box in feature
@@ -145,8 +148,8 @@ def fit_quality_classifier(
     a cheaper model, just a worse one), so the cost knob is
     GBT-specific by design."""
     from pyspark.ml.classification import GBTClassifier, LogisticRegression
-    from pyspark.ml.evaluation import BinaryClassificationEvaluator
     from pyspark.ml.feature import VectorAssembler
+    from pyspark.ml.functions import vector_to_array
 
     fcols = list(feature_cols) if feature_cols is not None else FEATURE_COLS
     bucket = F.pmod(F.xxhash64(F.col(id_col)), F.lit(holdout_mod))
@@ -159,9 +162,10 @@ def fit_quality_classifier(
             maxIter=max_iter, maxDepth=max_depth, seed=seed,
         )
         model = est.fit(vec.filter(bucket != 0))
-        auc = BinaryClassificationEvaluator(
-            labelCol=label_col, rawPredictionCol="rawPrediction"
-        ).evaluate(model.transform(vec.filter(bucket == 0)))
+        hold = model.transform(vec.filter(bucket == 0)).select(
+            F.col(label_col).alias("y"),
+            vector_to_array("rawPrediction")[1].alias("s"),
+        )
     elif model_type == "lr":
         vec = VectorAssembler(
             inputCols=fcols, outputCol="features"
@@ -175,9 +179,9 @@ def fit_quality_classifier(
             F.col(label_col).alias("y"),
             _lr_raw_score(model, fcols).alias("s"),
         )
-        auc = _rank_auc(hold, score_col="s", label_col="y")
     else:
         raise ValueError(f"model_type must be 'gbt' or 'lr', got {model_type!r}")
+    auc = _rank_auc(hold, score_col="s", label_col="y")
     model._served_feature_cols = fcols  # scoring must use the same set
     return model, auc
 
@@ -208,10 +212,16 @@ def _lr_raw_score(model, feature_cols: list[str] | None = None):
 
 
 def _rank_auc(scored: DataFrame, score_col: str, label_col: str) -> float:
-    """AUC by the Mann-Whitney rank statistic with average ranks for
-    ties — mathematically the trapezoidal ROC area MLlib's evaluator
-    computes. Runs on the bounded holdout sample (the one global
-    row_number window is over that sample, never the corpus)."""
+    """The one held-out AUC path of ``fit_quality_classifier`` (both
+    model types): the Mann-Whitney rank statistic with average ranks
+    for ties — mathematically the trapezoidal ROC area MLlib's
+    ``BinaryClassificationEvaluator`` computes, but exact: the
+    evaluator sums its trapezoids in partition order and can move in
+    the last bit between two partitionings of the same rows, while
+    each average rank here is an integer or an integer plus ½, so the
+    rank sum is exact in a double, and the class counts are longs.
+    Runs on the bounded holdout sample (the one global row_number
+    window is over that sample, never the corpus)."""
     from pyspark.sql import Window
 
     with_rn = scored.withColumn(

@@ -3093,12 +3093,14 @@ def _quality_model_path(sf_dir: str, tag: str) -> str:
     """Deterministic cache location for a fitted quality model: keyed by
     the documents file's absolute path + size + mtime plus the fit
     variant tag and config — a corpus refresh transparently re-keys
-    instead of serving a stale model (same keying as _ivf_index_path)."""
+    instead of serving a stale model (same keying as _ivf_index_path).
+    ``auc=rank`` names the held-out AUC method stored in meta.json, so
+    entries holding an evaluator AUC are never served."""
     import hashlib
     import os
 
     src = os.path.abspath(f"{sf_dir}/documents.parquet")
-    cfg = "gbt|maxIter=5|maxDepth=3"
+    cfg = "gbt|maxIter=5|maxDepth=3|auc=rank"
     try:
         st = os.stat(src)
         sig = f"{src}|{tag}|{cfg}|{st.st_size}|{st.st_mtime_ns}"

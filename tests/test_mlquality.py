@@ -157,3 +157,17 @@ def test_quality_model_cache_is_reused_and_score_identical(
     s_fresh = {r.doc_id: r.quality_prob
                for r in MQ.score_quality(feats, fresh).collect()}
     assert s_loaded == s_fresh
+
+
+def test_rank_auc_is_exact_with_ties_and_partition_independent(spark):
+    """The held-out AUC of both model types is _rank_auc: average ranks
+    for ties, exact in a double, so the result cannot depend on how the
+    holdout is partitioned (MLlib's evaluator sums its trapezoids in
+    partition order and can move in the last bit). Mann-Whitney
+    U = 1.5 + 2.5 + 3 = 7 over 3·3 pairs."""
+    rows = [(0.1, 0.0), (0.4, 0.0), (0.4, 1.0),
+            (0.8, 1.0), (0.8, 0.0), (0.9, 1.0)]
+    scored = spark.createDataFrame(rows, "s double, y double")
+    for n in (1, 7):
+        auc = MQ._rank_auc(scored.repartition(n), score_col="s", label_col="y")
+        assert auc == 7 / 9, (n, auc)
