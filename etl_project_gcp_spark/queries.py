@@ -22,7 +22,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from etl_project_gcp_spark import artifacts as A
 from etl_project_gcp_spark import exact as X
+from etl_project_gcp_spark.artifacts import _dir_stat_key
 from etl_project_gcp_spark.exact import oavg as _oavg
 from etl_project_gcp_spark.exact import oround as _oround
 from etl_project_gcp_spark.exact import osum_round as _osumr
@@ -76,74 +78,6 @@ def _ensure_session_confs(spark: SparkSession) -> None:
 # docs). Instance storage makes the cache's lifetime exactly the
 # session's: drop/stop the session, its plans go with it.
 _TABLE_MEMO_ATTR = "_spark_graft_table_memo"
-
-
-def _dir_stat_key(path: str, st) -> tuple | None:
-    """Stat-derived cache key for a parquet dataset path, or None when
-    the path vanished mid-scan (the caller falls through to a fresh
-    read so Spark raises its normal PATH_NOT_FOUND).
-
-    For a FILE dataset the file's own (ino, size, mtime_ns) suffices.
-    For a DIRECTORY dataset (the normal parquet layout) the directory
-    entry only changes on add/remove/rename of children — an in-place
-    edit of a part-file's CONTENTS updates that file's mtime but not
-    the directory's (ADVICE r12, medium). Fold every DESCENDANT's
-    (relative path, size, mtime_ns) into the key via a recursive
-    scandir walk (ADVICE r13: the original single-level scandir missed
-    in-place edits of part files INSIDE partition subdirectories, e.g.
-    ``year=.../part-0.parquet`` — the subdirectory's own stat doesn't
-    change either) — ~10 µs per level for typical part counts, vs the
-    ~100 ms footer resolution the memo saves — so content rewrites of
-    any file anywhere in the layout invalidate. The descendants land
-    in the key as a blake2b digest, not the raw tuple: a many-part
-    local directory would otherwise make every cache key carry the
-    whole listing (r13 self-review; the digest is exact up to 128-bit
-    collisions, far below the memo's other trust assumptions). A
-    subdirectory vanishing mid-walk is skipped — its disappearance
-    already changed the parent listing, so the digest moves anyway;
-    only the TOP path vanishing returns None. Symlinked subdirectories
-    are keyed as entries but not descended (no cycle risk); the
-    testdata/driver layouts contain none. The remaining undetectable
-    window is the same as for files: an in-place same-inode descendant
-    edit inside one mtime tick.
-    """
-    import hashlib
-    import os
-    import stat as _stat
-
-    if not _stat.S_ISDIR(st.st_mode):
-        return (st.st_ino, st.st_size, st.st_mtime_ns)
-    children: list[tuple] = []
-    # explicit worklist, not recursion (r14 self-review): a
-    # pathologically deep tree would otherwise raise RecursionError,
-    # which is NOT the OSError the fallback contract catches
-    dirs: list[tuple[str, str]] = [(path, "")]
-    top_level = True
-    while dirs:
-        d, pfx = dirs.pop()
-        try:
-            with os.scandir(d) as it:
-                entries = list(it)
-        except OSError:
-            if top_level:  # TOP dir removed between stat and scandir
-                return None
-            continue  # subdir vanished mid-walk: its parent entry
-            # already changed the digest
-        top_level = False
-        for entry in entries:
-            try:
-                cst = entry.stat()
-            except OSError:
-                continue
-            rel = pfx + entry.name
-            children.append((rel, cst.st_size, cst.st_mtime_ns))
-            if entry.is_dir(follow_symlinks=False):
-                dirs.append((entry.path, rel + "/"))
-    children.sort()
-    digest = hashlib.blake2b(
-        repr(children).encode(), digest_size=16
-    ).hexdigest()
-    return (st.st_ino, st.st_size, st.st_mtime_ns, digest)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -2454,210 +2388,34 @@ def dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lsh_index_path(sf_dir: str) -> str:
-    """Deterministic cache location for the persisted LSH screen index
-    of a corpus — keyed by the documents file's path + size + mtime
-    plus the signature parameters (same keying as _ivf_index_path; a
-    parameter change or corpus refresh re-keys instead of serving a
-    mismatched band table)."""
-    import hashlib
-    import os
+def _lsh_index_ensure(
+    spark: SparkSession, sf_dir: str, bucket_by: int | None = None
+) -> str:
+    """The persisted LSH screen index over the non-delta corpus slice
+    (artifacts.ensure). ``bucket_by=N`` lands bands and shingles as
+    bucketed tables under the ``lsh_b_{key}`` prefix; the build drops
+    those catalog entries again (external tables: metadata only) so
+    the first search re-registers them against the installed path from
+    the params.json sidecar."""
 
-    src = os.path.abspath(f"{sf_dir}/documents.parquet")
-    cfg = "k=5|h=64|b=16|delta=mod10ne3"
-    try:
-        st = os.stat(src)
-        sig = f"{src}|{cfg}|{st.st_size}|{st.st_mtime_ns}"
-    except OSError:
-        sig = f"{src}|{cfg}"
-    key = hashlib.sha1(sig.encode()).hexdigest()[:16]
-    return os.path.join(_cache_root("lsh"), key)
-
-
-def _trash_name(path: str) -> str:
-    """Per-(process, thread) trash name for _repair_unready's
-    rename-aside. Pid alone is only race-free ACROSS processes — two
-    threads in one driver share a pid, so thread B's leading
-    rmtree(trash) could delete a good build thread A had just renamed
-    aside for rescue (ADVICE r11). Thread ident makes concurrent
-    same-process repairers never collide; a stale leftover under a
-    dead thread's name is cleared by that same (pid, tid) pair on
-    reuse — a LIVE repairer always holds a different pair."""
-    import os
-    import threading
-
-    return f"{path}.trash-{os.getpid()}-{threading.get_ident()}"
-
-
-def _repair_unready(path: str, ready) -> bool:
-    """Clear an unready cache dir WITHOUT racing a concurrent builder
-    (ADVICE r10): a bare rmtree(path) between a failed readiness check
-    and the delete could destroy a fresh build another process renamed
-    into place during the gap. Rename the dir aside to a
-    (pid, thread)-suffixed trash name first — atomic, so a
-    concurrently-installed build is either untouched (our rename sees
-    nothing and raises) or moved aside INTACT, in which case readiness
-    is re-checked on the trash dir and the build is renamed straight
-    back. Returns True when a good build is now at `path` and the
-    caller should serve it instead of rebuilding."""
-    import os
-    import shutil
-
-    trash = _trash_name(path)
-    # clear any stale leftover under OUR trash name first (a crashed
-    # earlier repair, incl. (pid, tid) reuse across container
-    # restarts) — renaming a directory onto a non-empty one fails
-    # ENOTEMPTY, which would strand the unready dir at `path` and turn
-    # every future build install into a rename failure. The
-    # (pid, thread) suffix makes this delete race-free: a LIVE
-    # concurrent repairer holds a different pair (ADVICE r11).
-    shutil.rmtree(trash, ignore_errors=True)
-    try:
-        os.rename(path, trash)
-    except FileNotFoundError:
-        # the EXPECTED race: nothing cached at all, or another
-        # repairer moved it aside first; if a concurrent builder
-        # landed a good build in the gap, serve it rather than
-        # deleting or rebuilding it. Other OSError kinds (EACCES,
-        # EXDEV, ...) mean the unready dir is STILL at `path` — a
-        # rebuild would waste a full index build only for the install
-        # rename to hit the same wall, so fail fast (ADVICE r11).
-        return ready(path)
-    if ready(trash):
-        # we grabbed a just-installed GOOD build — put it back
-        try:
-            os.rename(trash, path)
-            return True
-        except OSError:
-            # yet another builder already filled path; ours is a
-            # duplicate — fall through and discard it
-            pass
-    shutil.rmtree(trash, ignore_errors=True)
-    return ready(path)
-
-
-def _install_build(tmp: str, path: str, ready) -> None:
-    """Install a finished build dir at ``path`` by atomic rename,
-    tolerating the repair window (r16): on a cache that is ALSO
-    repaired by `_repair_unready`, a failed install rename can race the
-    transient state where a concurrent repairer holds the
-    currently-installed GOOD build renamed aside to its trash name —
-    a one-shot ``if not ready(path): raise`` misreads that instant as
-    permanent failure (observed as a spurious ENOTEMPTY under the
-    multithread stress test). Re-check readiness and re-attempt the
-    rename for a short bounded period instead: the repairer either
-    renames the good build straight back (→ ready) or clears its trash
-    (→ our next rename lands). Genuinely stuck conditions (EACCES,
-    EXDEV, an unready dir nobody clears) still raise, just after the
-    bounded loop instead of instantly."""
-    import os
-    import time
-
-    last_attempt = 49
-    for attempt in range(last_attempt + 1):
-        try:
-            os.rename(tmp, path)
+    def build(tmp: str, key: str) -> None:
+        corpus = _t(spark, sf_dir, "documents").filter(
+            F.col("doc_id") % 10 != 3
+        )
+        if bucket_by is None:
+            DD.lsh_build_index(corpus, tmp)
             return
-        except OSError:
-            if ready(path):
-                return  # a concurrent builder's good build is in place
-            if attempt == last_attempt:
-                raise
-            time.sleep(0.01)
-
-
-def _lsh_index_ensure(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once lifecycle for the LSH screen index (the
-    _ivf_index_ensure discipline: pid-suffixed build dir, atomic
-    rename, ownership-checked readiness, loser-deletes-own on a race)."""
-    import os
-    import shutil
-
-    path = _lsh_index_path(sf_dir)
-
-    def _ready(p: str) -> bool:
-        # params.json is part of readiness: lsh_search_index REFUSES a
-        # sidecar-less index since r10 (lost-sidecar hazard), so a
-        # cached pre-sidecar artifact must read as not-ready here
-        return (
-            _dir_ready(f"{p}/bands")
-            and _dir_ready(f"{p}/shingles")
-            and os.path.exists(f"{p}/params.json")
+        prefix = f"lsh_b_{key}"
+        DD.lsh_build_index(
+            corpus, tmp, bucket_by=bucket_by, table_prefix=prefix
         )
-
-    if _ready(path):
-        return path
-    # read-repair: a cache dir that exists but fails readiness (a
-    # pre-sidecar build from an earlier round, or a half-landed one)
-    # would otherwise refuse on every future search; this cache OWNS
-    # its artifacts, so clear and rebuild under the same key —
-    # rename-aside first so a concurrent builder's fresh install is
-    # never deleted out from under its readers (ADVICE r10)
-    if _repair_unready(path, _ready):
-        return path
-    corpus = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 != 3)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.build-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    try:
-        DD.lsh_build_index(corpus, tmp)
-        _install_build(tmp, path, _ready)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return path
-
-
-def _lsh_bucketed_index_ensure(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once lifecycle for the BUCKETED LSH screen index: same
-    content-keyed cache + atomic-rename discipline as
-    `_lsh_index_ensure`, but both artifacts land as bucketed tables
-    (bands clustered by (band, bh), shingles by doc_id) so a search
-    shuffles the delta side only. The catalog entries are re-registered
-    against the final location after the rename (`lsh_search_index`
-    does this from the params.json sidecar), so the build-dir tables
-    are dropped here."""
-    import hashlib
-    import os
-    import shutil
-
-    src = os.path.abspath(f"{sf_dir}/documents.parquet")
-    cfg = "k=5|h=64|b=16|delta=mod10ne3|bucketed=8"
-    try:
-        st = os.stat(src)
-        sig = f"{src}|{cfg}|{st.st_size}|{st.st_mtime_ns}"
-    except OSError:
-        sig = f"{src}|{cfg}"
-    key = hashlib.sha1(sig.encode()).hexdigest()[:16]
-    path = os.path.join(_cache_root("lsh"), key)
-    prefix = f"lsh_b_{key}"
-
-    def _ready(p: str) -> bool:
-        # see _lsh_index_ensure: sidecar presence is part of readiness
-        return (
-            _dir_ready(f"{p}/bands")
-            and _dir_ready(f"{p}/shingles")
-            and os.path.exists(f"{p}/params.json")
-        )
-
-    if _ready(path):
-        return path
-    if _repair_unready(path, _ready):  # race-safe read-repair, see above
-        return path
-    corpus = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 != 3)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.build-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    try:
-        DD.lsh_build_index(corpus, tmp, bucket_by=8, table_prefix=prefix)
-        # the build registered tables at the tmp location; drop them so
-        # the first search re-registers against the renamed final path
-        # (external tables: metadata-only drop)
         for t in (f"{prefix}_bands", f"{prefix}_shingles"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
-        _install_build(tmp, path, _ready)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return path
+
+    cfg = "k=5|h=64|b=16|delta=mod10ne3"
+    if bucket_by is not None:
+        cfg += f"|bucketed={bucket_by}"
+    return A.ensure("lsh", [f"{sf_dir}/documents.parquet"], cfg, build)
 
 
 @register("dedup_incremental_near_bucketed", _INCR_NEAR_ORACLE)
@@ -2672,7 +2430,7 @@ def dedup_incremental_near_bucketed(
     paid once at build (plan-tested: zero corpus-side Exchange under
     sort-merge join). Same oracle as dedup_incremental_near: the
     bucketed layout must produce the identical screen verdict."""
-    path = _lsh_bucketed_index_ensure(spark, sf_dir)
+    path = _lsh_index_ensure(spark, sf_dir, bucket_by=8)
     delta = _t_wide(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 3)
     return DD.lsh_search_index(spark, path, delta)
 
@@ -2683,7 +2441,7 @@ def dedup_incremental_near_indexed(spark: SparkSession, sf_dir: str) -> DataFram
     signature index (operators/dedup.py::lsh_build_index /
     lsh_search_index) — the 100 TB lifecycle made concrete: the corpus
     bands/shingles materialize once (content-keyed cache, atomic
-    rename — the IVF-index discipline), each ingest batch searches the
+    rename — artifacts.ensure), each ingest batch searches the
     index with NO corpus-text rescan, and admitted batches append via
     lsh_append_index (append==rebuild equality pytest-pinned). Same
     oracle as dedup_incremental_near: the persisted path must produce
@@ -2949,165 +2707,32 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pinned_or_live(spark, "ann_ivf_kmeans_topk", sf_dir, live)
 
 
-def _cache_root(kind: str) -> str:
-    """Per-user artifact cache root: config-overridable, else XDG cache,
-    else a uid-suffixed tempdir — never a world-shared fixed path (a
-    shared /tmp name lets another user's leftover or adversarially
-    pre-created directory be served as cached data, or breaks on
-    permissions). ``kind`` namespaces artifact families (ivf indexes,
-    quality models)."""
-    import os
-    import tempfile
-
-    override = os.environ.get("ETL_GCP_SPARK_CACHE_DIR")
-    if override:
-        return os.path.join(override, kind)
-    xdg = os.environ.get("XDG_CACHE_HOME")
-    home = os.path.expanduser("~")
-    if xdg:
-        return os.path.join(xdg, "etl_gcp_spark", kind)
-    if home and home != "/" and os.path.isdir(home):
-        return os.path.join(home, ".cache", "etl_gcp_spark", kind)
-    uid = os.getuid() if hasattr(os, "getuid") else 0
-    return os.path.join(tempfile.gettempdir(), f"etl_gcp_spark_{kind}_{uid}")
-
-
-def _ivf_cache_root() -> str:
-    return _cache_root("ivf")
-
-
-def _ivf_index_path(sf_dir: str, n_lists: int) -> str:
-    """Deterministic on-disk location for the persisted IVF index of a
-    given (corpus, n_lists): keyed by the embeddings file's absolute
-    path + size + mtime, so repeat invocations REUSE the index (the
-    production build-once/search-many lifecycle) and a corpus refresh
-    (new mtime) transparently re-keys instead of serving stale lists.
-    Rooted in a per-user cache dir (see _ivf_cache_root)."""
-    import hashlib
-    import os
-
-    src = os.path.abspath(f"{sf_dir}/embeddings.parquet")
-    try:
-        st = os.stat(src)
-        sig = f"{src}|{n_lists}|{st.st_size}|{st.st_mtime_ns}"
-    except OSError:
-        sig = f"{src}|{n_lists}"
-    key = hashlib.sha1(sig.encode()).hexdigest()[:16]
-    return os.path.join(_ivf_cache_root(), key)
-
-
-def _ivf_index_ready(path: str) -> bool:
-    """A reusable index = complete markers AND owned by this user (a
-    foreign-owned directory at our key is never trusted as index data)."""
-    import os
-
-    if not (
-        os.path.exists(f"{path}/centroids/_SUCCESS")
-        and os.path.exists(f"{path}/vectors/_SUCCESS")
-    ):
-        return False
-    if hasattr(os, "getuid"):
-        try:
-            if os.stat(path).st_uid != os.getuid():
-                return False
-        except OSError:
-            return False
-    return True
-
-
 def _ivf_index_ensure(emb: DataFrame, sf_dir: str, n_lists: int) -> str:
-    """Build-once/reuse-forever with crash- and race-safety: build into a
-    pid-suffixed sibling, then atomically rename into the final key. A
-    crashed build leaves only a .build-* sibling (never half-complete
-    _SUCCESS-bearing state at the served path); concurrent builders race
-    on the rename and the loser discards its copy."""
-    import os
-    import shutil
-
-    path = _ivf_index_path(sf_dir, n_lists)
-    if _ivf_index_ready(path):
-        return path
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.build-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    try:
-        VX.ivf_build_index(emb, tmp, n_lists=n_lists)
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            # another process won the race (target now exists) — use theirs
-            if not _ivf_index_ready(path):
-                raise
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return path
+    """The persisted IVF index of (corpus, n_lists) — artifacts.ensure:
+    built once, every later search reads only the probed lists."""
+    return A.ensure(
+        "ivf", [f"{sf_dir}/embeddings.parquet"], f"n_lists={n_lists}",
+        lambda tmp, _key: VX.ivf_build_index(emb, tmp, n_lists=n_lists),
+    )
 
 
 def _kmeans_centroids_ensure(
     spark: SparkSession, emb: DataFrame, sf_dir: str, n_lists: int
 ) -> DataFrame:
-    """Persisted trained coarse quantizer (build-once lifecycle, same
-    cache/atomic-rename/ownership discipline as _ivf_index_ensure):
-    kmeans_fit is deterministic per corpus, so the cached centroid set
-    equals a fresh fit and kmeans_assign reproduces the training-time
-    assignment exactly (vector.py::_argmax_assign is shared) — search
-    results are identical, the max_iter Lloyd iterations are paid once
-    per corpus instead of per call."""
-    import os
-    import shutil
+    """Persisted trained coarse quantizer (artifacts.ensure): kmeans_fit
+    is deterministic per corpus, so the cached centroid set equals a
+    fresh fit and kmeans_assign reproduces the training-time assignment
+    exactly (vector.py::_argmax_assign is shared) — search results are
+    identical, the Lloyd iterations are paid once per corpus."""
 
-    path = _ivf_index_path(sf_dir, n_lists) + ".kmeans-centroids"
-    if not _dir_ready(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.build-{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        try:
-            centroids, _, _ = VX.kmeans_fit(emb, n_lists)
-            centroids.coalesce(1).write.mode("overwrite").parquet(tmp)
-            try:
-                os.rename(tmp, path)
-            except OSError:
-                if not _dir_ready(path):
-                    raise
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(path)
+    def build(tmp: str, _key: str) -> None:
+        centroids, _, _ = VX.kmeans_fit(emb, n_lists)
+        centroids.coalesce(1).write.mode("overwrite").parquet(tmp)
 
-
-def _dir_ready(path: str) -> bool:
-    """_SUCCESS marker present AND directory owned by this user."""
-    import os
-
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        return False
-    if hasattr(os, "getuid"):
-        try:
-            if os.stat(path).st_uid != os.getuid():
-                return False
-        except OSError:
-            return False
-    return True
-
-
-def _quality_model_path(sf_dir: str, tag: str) -> str:
-    """Deterministic cache location for a fitted quality model: keyed by
-    the documents file's absolute path + size + mtime plus the fit
-    variant tag and config — a corpus refresh transparently re-keys
-    instead of serving a stale model (same keying as _ivf_index_path).
-    ``auc=rank`` names the held-out AUC method stored in meta.json, so
-    entries holding an evaluator AUC are never served."""
-    import hashlib
-    import os
-
-    src = os.path.abspath(f"{sf_dir}/documents.parquet")
-    cfg = "gbt|maxIter=5|maxDepth=3|auc=rank"
-    try:
-        st = os.stat(src)
-        sig = f"{src}|{tag}|{cfg}|{st.st_size}|{st.st_mtime_ns}"
-    except OSError:
-        sig = f"{src}|{tag}|{cfg}"
-    key = hashlib.sha1(sig.encode()).hexdigest()[:16]
-    return os.path.join(_cache_root("mlquality"), key)
+    return spark.read.parquet(A.ensure(
+        "kmeans", [f"{sf_dir}/embeddings.parquet"], f"n_lists={n_lists}",
+        build,
+    ))
 
 
 def _quality_model_ensure(
@@ -3116,45 +2741,38 @@ def _quality_model_ensure(
     tag: str,
     feature_cols: list[str] | None = None,
 ):
-    """Fit-once/score-always for the quality classifier (r7 verdict ask
-    #4 — the IVF-index lifecycle applied to the model): on a cache miss
-    fit the seeded GBT, persist model + held-out AUC +
-    _served_feature_cols into a pid-suffixed sibling and atomically
-    rename into the content-keyed path; on a hit reload both. MLlib
+    """Fit-once/score-always for the quality classifier
+    (artifacts.ensure): on a miss fit the seeded GBT and persist model
+    + held-out AUC + _served_feature_cols; on a hit reload both. MLlib
     save/load keeps the trees bit-exact, so a reloaded model's scores
-    equal a fresh fit's and the gate's floors stay hash-stable while
-    repeat invocations skip the boosting rounds entirely."""
-    import os
-    import shutil
+    equal a fresh fit's on the same layout.
 
-    path = _quality_model_path(sf_dir, tag)
-    if not _dir_ready(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.build-{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        try:
-            model, auc = MQ.fit_quality_classifier(
-                feats, model_type="gbt", feature_cols=feature_cols,
-                max_iter=5, max_depth=3,
-            )
-            MQ.save_quality_model(model, auc, tmp)
-            with open(f"{tmp}/_SUCCESS", "w"):
-                pass
-            try:
-                os.rename(tmp, path)
-            except OSError:
-                if not _dir_ready(path):
-                    raise
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return MQ.load_quality_model(path)
+    The fit input gets a canonical layout — one partition sorted by
+    doc_id (``layout=canon`` in the key). Tree learning samples split
+    candidates per partition, so at 8 cores the ``gen`` fit grew
+    different trees on ``_t_wide`` features than on a plain read, and
+    the cached model depended on which caller built it. ``auc=rank``
+    names the held-out AUC method stored in meta.json."""
+
+    def build(tmp: str, _key: str) -> None:
+        canon = feats.coalesce(1).sortWithinPartitions("doc_id")
+        model, auc = MQ.fit_quality_classifier(
+            canon, model_type="gbt", feature_cols=feature_cols,
+            max_iter=5, max_depth=3,
+        )
+        MQ.save_quality_model(model, auc, tmp)
+
+    cfg = f"{tag}|gbt|maxIter=5|maxDepth=3|auc=rank|layout=canon"
+    return MQ.load_quality_model(
+        A.ensure("mlquality", [f"{sf_dir}/documents.parquet"], cfg, build)
+    )
 
 
 @register("ann_ivf_index_topk", _pin_oracle("ann_ivf_index_topk"))
 def ann_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted-IVF search (X3 production lifecycle): build the index
     ONCE (centroids + vectors partitioned by list_id on disk, under a
-    deterministic per-(corpus, n_lists) path — see _ivf_index_path),
+    content-keyed per-(corpus, n_lists) path — _ivf_index_ensure),
     then every search reads only the probed partitions — partition
     pruning makes per-search I/O nprobe/n_lists of the corpus. Results
     are equality-tested against the in-memory IVF path and the pruning
@@ -3397,29 +3015,17 @@ def binary_embed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pinned_or_live(spark, "binary_embed_topk", sf_dir, live)
 
 
-def _binary_landing_ensure(sf_dir: str, n_docs: int = 60) -> str:
-    """Land one deterministic PNG FILE per doc id (< n_docs) into a
-    per-(sf, n) cache dir — the on-disk fixture for the real-file
-    ingest path (binaryFile source). Bytes are the synthesize_media
+def _binary_landing_ensure(n_docs: int = 60) -> str:
+    """Land one deterministic PNG FILE per doc id (< n_docs) — the
+    on-disk fixture for the real-file ingest path (binaryFile source),
+    built once by artifacts.ensure. Bytes are the synthesize_media
     formula payloads (media.png_encode), so the decode oracle can
-    replay the dimension formulas. Build-once: atomic tmp-sibling
-    build + rename with a _SUCCESS marker (the IVF-index lifecycle);
-    driver-local by the registry cache contract (_cache_root)."""
+    replay the dimension formulas; they depend on nothing but n_docs."""
     import os
-    import shutil
-    import tempfile
 
     from etl_project_gcp_spark.operators import media as M
 
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = os.path.join(
-        _cache_root("binland"), f"{sf_name}_n{n_docs}"
-    )
-    if _dir_ready(path):
-        return path
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = tempfile.mkdtemp(dir=os.path.dirname(path))
-    try:
+    def build(tmp: str, _key: str) -> None:
         for i in range(n_docs):
             w, h = 8 + i % 13, 8 + i % 7
             px = [
@@ -3431,20 +3037,12 @@ def _binary_landing_ensure(sf_dir: str, n_docs: int = 60) -> str:
             ]
             with open(os.path.join(tmp, f"doc_{i:05d}.png"), "wb") as f:
                 f.write(M.png_encode(px))
-        with open(os.path.join(tmp, "_SUCCESS"), "w"):
-            pass
         # decoy the glob filter must skip (proves pathGlobFilter works
         # in the gate itself, not just in pytest)
         with open(os.path.join(tmp, "notes.txt"), "w") as f:
             f.write("not a png")
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            if not _dir_ready(path):
-                raise
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return path
+
+    return A.ensure("binland", [], f"png|n={n_docs}", build)
 
 
 @register(
@@ -3459,7 +3057,7 @@ def _binary_landing_ensure(sf_dir: str, n_docs: int = 60) -> str:
 def binary_file_ingest_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL-FILE multimodal ingest (sources/readers.py::read_binary_dir,
     Spark's ``binaryFile`` source): 60 on-disk PNG files (one per doc
-    id, landed once per corpus — _binary_landing_ensure) are read as
+    id, landed once — _binary_landing_ensure) are read as
     (path, length, content) rows with a ``*.png`` pathGlobFilter (a
     planted .txt decoy must be skipped by the SOURCE, not a filter),
     the doc id is parsed from the file NAME, and each payload's IHDR
@@ -3473,7 +3071,7 @@ def binary_file_ingest_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_project_gcp_spark.sources.readers import read_binary_dir
 
     ship_package_to_workers(spark)
-    land = _binary_landing_ensure(sf_dir, 60)
+    land = _binary_landing_ensure(60)
     files = read_binary_dir(spark, land, glob="*.png")
     media = files.select(
         F.regexp_extract(F.col("path"), r"doc_(\d+)\.png$", 1)
@@ -5661,12 +5259,12 @@ def quality_model_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     within 0.01 of the 30-round config at both sf0.01 and sf0.1),
     features localCheckpointed so the fits and scoring passes share
     the computed signals — and (r7) the fitted models + their held-out
-    AUCs PERSIST at a content-keyed cache path (_quality_model_ensure,
-    the IVF-index fit-once lifecycle): repeat invocations reload the
-    exact trees and fit-time AUCs instead of re-running the boosting
-    rounds, and a corpus refresh re-keys the cache. All seeding is
-    deterministic and MLlib save/load is bit-exact, so the VALUES
-    oracle asserts exact rows either way.
+    AUCs PERSIST at a content-keyed cache path (_quality_model_ensure):
+    repeat invocations reload the exact trees and fit-time AUCs instead
+    of re-running the boosting rounds, and a corpus refresh re-keys the
+    cache. All seeding is deterministic, the fit input has one
+    canonical layout whatever the session width, and MLlib save/load
+    is bit-exact, so the VALUES oracle asserts exact rows either way.
     """
     from concurrent.futures import ThreadPoolExecutor
 

@@ -555,7 +555,7 @@ def test_dir_stat_key_survives_pathologically_deep_tree(tmp_path):
     import os
     import sys
 
-    from etl_project_gcp_spark.queries import _dir_stat_key
+    from etl_project_gcp_spark.artifacts import _dir_stat_key
 
     # A tree deeper than the recursion limit cannot be BUILT on Linux
     # (PATH_MAX caps ~2000 levels, below pytest's raised limit), so
@@ -586,7 +586,7 @@ def test_dir_stat_key_vanished_dir_returns_none(tmp_path):
     import os
     import shutil
 
-    from etl_project_gcp_spark.queries import _dir_stat_key
+    from etl_project_gcp_spark.artifacts import _dir_stat_key
 
     d = tmp_path / "gone.parquet"
     d.mkdir()

@@ -177,10 +177,11 @@ def test_lsh_index_lifecycle_on_object_store_semantics(
 # Engine modules whose artifact/data/index/model paths must be
 # scheme-portable: every byte they put on or read from storage goes
 # through Spark writers/readers or fsio, so a gs:// deployment works
-# end-to-end. queries.py is deliberately NOT here: its os/shutil use
-# manages the registry's driver-local artifact cache (_cache_root —
-# XDG/tempdir by contract, never a data path) and fixture staging for
-# oracle checks. tests/ and tools/ are driver-side tooling.
+# end-to-end. artifacts.py and queries.py are deliberately NOT here:
+# artifacts.py is the registry's driver-local artifact cache module
+# (_cache_root — XDG/tempdir by contract, never a data path), and
+# queries.py's os/shutil use stages fixtures for oracle checks.
+# tests/ and tools/ are driver-side tooling.
 _ENGINE_DIRS = ("operators", "sources", "plans", "streaming", "functions")
 _ENGINE_TOP = (
     "catalog.py", "datagen.py", "exact.py", "service.py", "session.py",

@@ -123,11 +123,15 @@ def test_quality_model_cache_is_reused_and_score_identical(
     across the cold→warm transition."""
     import os
 
+    from etl_project_gcp_spark import artifacts as A
     from etl_project_gcp_spark.queries import (
         _quality_model_ensure,
-        _quality_model_path,
         quality_model_report,
     )
+
+    def _quality_model_path(sf, tag):
+        cfg = f"{tag}|gbt|maxIter=5|maxDepth=3|auc=rank|layout=canon"
+        return A.path("mlquality", [f"{sf}/documents.parquet"], cfg)
 
     monkeypatch.setenv("ETL_GCP_SPARK_CACHE_DIR", str(tmp_path))
     sf = "/root/testdata/sf0.001"
@@ -171,3 +175,29 @@ def test_rank_auc_is_exact_with_ties_and_partition_independent(spark):
     for n in (1, 7):
         auc = MQ._rank_auc(scored.repartition(n), score_col="s", label_col="y")
         assert auc == 7 / 9, (n, auc)
+
+
+def test_quality_model_fit_is_layout_independent(spark, monkeypatch, tmp_path):
+    """The cached model must not depend on which caller built it: the
+    quality-model build fits on a canonical layout (one partition
+    sorted by doc_id), so the same features at repartition(1) and
+    repartition(8) give the same gen trees and held-out AUC (without
+    it, tree learning's per-partition split sampling grew different
+    gen trees on _t_wide features at 8 cores). Each width builds into
+    its own empty cache."""
+    from etl_project_gcp_spark.queries import _quality_model_ensure
+
+    sf = "/root/testdata/sf0.001"
+    feats = MQ.quality_features(
+        spark.read.parquet(f"{sf}/documents.parquet")
+    ).localCheckpoint()
+    gen_cols = [c for c in MQ.FEATURE_COLS if c != "stopword_hit_ratio"]
+    got = {}
+    for n in (1, 8):
+        monkeypatch.setenv("ETL_GCP_SPARK_CACHE_DIR", str(tmp_path / f"w{n}"))
+        model, auc = _quality_model_ensure(
+            feats.repartition(n), sf, "gen", gen_cols
+        )
+        # the trees, minus the first line (it names the model's uid)
+        got[n] = (auc, model.toDebugString.split("\n", 1)[1])
+    assert got[1] == got[8]

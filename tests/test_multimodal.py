@@ -250,7 +250,7 @@ def test_binary_file_ingest_meta_decoy_and_rebuild(spark, tmp_path, monkeypatch)
     sf = "/root/testdata/sf0.001"
     a = sorted(map(tuple, fn(spark, sf).collect()))
     assert len(a) == 60 and all(len(r) == 3 for r in a)
-    land = Q._binary_landing_ensure(sf, 60)
+    land = Q._binary_landing_ensure(60)
     import os
 
     names = set(os.listdir(land))

@@ -1328,7 +1328,7 @@ def test_repair_unready_clears_stale_dir(tmp_path):
     removed and the caller is told to rebuild."""
     import os
 
-    from etl_project_gcp_spark.queries import _repair_unready
+    from etl_project_gcp_spark.artifacts import _repair_unready
 
     p = str(tmp_path / "idx")
     _mk_index(p, ready=False)
@@ -1337,7 +1337,7 @@ def test_repair_unready_clears_stale_dir(tmp_path):
 
 
 def test_repair_unready_missing_dir_is_noop(tmp_path):
-    from etl_project_gcp_spark.queries import _repair_unready
+    from etl_project_gcp_spark.artifacts import _repair_unready
 
     p = str(tmp_path / "never_built")
     assert _repair_unready(p, _ready) is False
@@ -1351,9 +1351,9 @@ def test_repair_unready_preserves_concurrently_installed_build(tmp_path):
     the trash dir and put it back intact."""
     import os
 
-    from etl_project_gcp_spark.queries import _repair_unready
+    from etl_project_gcp_spark.artifacts import _repair_unready
 
-    from etl_project_gcp_spark.queries import _trash_name
+    from etl_project_gcp_spark.artifacts import _trash_name
 
     p = str(tmp_path / "idx")
     _mk_index(p, ready=True)  # the concurrent builder's finished install
@@ -1369,7 +1369,7 @@ def test_repair_unready_lost_rename_race_rechecks_path(tmp_path, monkeypatch):
     build in the meantime."""
     import os
 
-    from etl_project_gcp_spark import queries as Q
+    from etl_project_gcp_spark import artifacts as A
 
     p = str(tmp_path / "idx")
     real_rename = os.rename
@@ -1385,7 +1385,7 @@ def test_repair_unready_lost_rename_race_rechecks_path(tmp_path, monkeypatch):
         return real_rename(src, dst)
 
     monkeypatch.setattr(os, "rename", racing_rename)
-    assert Q._repair_unready(p, _ready) is True
+    assert A._repair_unready(p, _ready) is True
     assert _ready(p)
 
 
@@ -1397,9 +1397,9 @@ def test_repair_unready_survives_stale_trash_leftover(tmp_path):
     install. The helper must clear its own trash name first."""
     import os
 
-    from etl_project_gcp_spark.queries import _repair_unready
+    from etl_project_gcp_spark.artifacts import _repair_unready
 
-    from etl_project_gcp_spark.queries import _trash_name
+    from etl_project_gcp_spark.artifacts import _trash_name
 
     p = str(tmp_path / "idx")
     _mk_index(p, ready=False)
@@ -1419,7 +1419,7 @@ def test_repair_unready_trash_names_differ_across_threads(tmp_path):
     touch each other's rename-aside."""
     import threading
 
-    from etl_project_gcp_spark.queries import _trash_name
+    from etl_project_gcp_spark.artifacts import _trash_name
 
     p = str(tmp_path / "idx")
     mine = _trash_name(p)
@@ -1444,7 +1444,7 @@ def test_repair_unready_reraises_non_enoent_rename_failure(
 
     import pytest
 
-    from etl_project_gcp_spark import queries as Q
+    from etl_project_gcp_spark import artifacts as A
 
     p = str(tmp_path / "idx")
     _mk_index(p, ready=False)
@@ -1454,11 +1454,14 @@ def test_repair_unready_reraises_non_enoent_rename_failure(
 
     monkeypatch.setattr(os, "rename", denied_rename)
     with pytest.raises(PermissionError):
-        Q._repair_unready(p, _ready)
+        A._repair_unready(p, _ready)
     assert os.path.exists(p)  # untouched — nothing was deleted
 
 
-def test_repair_unready_multithread_stress_converges(tmp_path):
+@pytest.mark.parametrize("shape", ["lsh_sidecar", "success_marker"])
+def test_repair_unready_multithread_stress_converges(
+    tmp_path, monkeypatch, shape
+):
     """Real-thread stress for the whole repair/build/install lifecycle
     (the r10-r12 ADVICE thread): 8 threads race _repair_unready plus a
     build-and-install on ONE cache path, alternating rounds that
@@ -1469,14 +1472,47 @@ def test_repair_unready_multithread_stress_converges(tmp_path):
     FileNotFoundError on the rename-back — so the regression signal
     here is ANY exception escaping a worker. After every round all
     repairs and installs have completed (barrier), so the path must be
-    ready and no .trash-*/.build-* strands may remain."""
+    ready and no .trash-*/.build-* strands may remain.
+
+    ``lsh_sidecar`` drives the helpers directly with the sidecar-style
+    readiness predicate; ``success_marker`` runs the same rounds
+    through artifacts.ensure, whose readiness is the top-level
+    _SUCCESS marker and whose build dirs are per thread."""
     import os
     import shutil
+    import sys
     import threading
 
-    from etl_project_gcp_spark.queries import _install_build, _repair_unready
+    from etl_project_gcp_spark import artifacts as A
+    from etl_project_gcp_spark.artifacts import _install_build, _repair_unready
 
-    p = str(tmp_path / "idx")
+    if shape == "lsh_sidecar":
+        p = str(tmp_path / "idx")
+        is_ready = _ready
+
+        def seed(ok):
+            _mk_index(p, ready=ok)
+
+        def converge():
+            if not (_ready(p) or _repair_unready(p, _ready)):
+                build_and_install()
+    else:
+        monkeypatch.setenv("ETL_GCP_SPARK_CACHE_DIR", str(tmp_path))
+        p = A.path("stress", [], "cfg")
+        is_ready = A.ready
+
+        def seed(ok):
+            _mk_index(p, ready=True)
+            if ok:
+                with open(os.path.join(p, "_SUCCESS"), "w"):
+                    pass
+
+        def converge():
+            got = A.ensure(
+                "stress", [], "cfg", lambda tmp, _key: _mk_index(tmp)
+            )
+            assert got == p
+    strand_dir = os.path.dirname(p)
     n_threads, n_rounds = 8, 12
     barrier = threading.Barrier(n_threads)
     errors = []
@@ -1499,16 +1535,15 @@ def test_repair_unready_multithread_stress_converges(tmp_path):
                 barrier.wait()
                 if idx == 0:
                     shutil.rmtree(p, ignore_errors=True)
-                    _mk_index(p, ready=(rnd % 2 == 0))
+                    seed(rnd % 2 == 0)
                 barrier.wait()
-                if not (_ready(p) or _repair_unready(p, _ready)):
-                    build_and_install()
+                converge()
                 barrier.wait()
                 if idx == 0:
-                    assert _ready(p), f"round {rnd}: path not ready"
+                    assert is_ready(p), f"round {rnd}: path not ready"
                     strands = [
                         f
-                        for f in os.listdir(tmp_path)
+                        for f in os.listdir(strand_dir)
                         if ".trash-" in f or ".build-" in f
                     ]
                     assert not strands, f"round {rnd}: strands {strands}"
@@ -1520,12 +1555,18 @@ def test_repair_unready_multithread_stress_converges(tmp_path):
     threads = [
         threading.Thread(target=worker, args=(i,)) for i in range(n_threads)
     ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join(timeout=60)
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the threads more finely
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
     assert not errors, errors
-    assert _ready(p)
+    assert is_ready(p)
 
 
 @pytest.mark.parametrize("bands,rows_per_band", [(16, 4), (8, 8), (32, 2)])

@@ -301,19 +301,17 @@ def test_ivf_index_path_is_deterministic_and_reused(spark, sf01_dir):
     mkdtemp leak)."""
     import os
 
-    from etl_project_gcp_spark.queries import (
-        _ivf_index_path,
-        _ivf_index_ready,
-        ann_ivf_index_topk,
-    )
+    from etl_project_gcp_spark import artifacts as A
+    from etl_project_gcp_spark.queries import ann_ivf_index_topk
 
-    p1 = _ivf_index_path(sf01_dir, n_lists=16)
-    p2 = _ivf_index_path(sf01_dir, n_lists=16)
+    src = [f"{sf01_dir}/embeddings.parquet"]
+    p1 = A.path("ivf", src, "n_lists=16")
+    p2 = A.path("ivf", src, "n_lists=16")
     assert p1 == p2
-    assert _ivf_index_path(sf01_dir, n_lists=8) != p1
+    assert A.path("ivf", src, "n_lists=8") != p1
 
     first = ann_ivf_index_topk(spark, sf01_dir).collect()
-    assert _ivf_index_ready(p1)
+    assert A.ready(p1)
     mtime = os.path.getmtime(f"{p1}/vectors/_SUCCESS")
     second = ann_ivf_index_topk(spark, sf01_dir).collect()
     # unchanged _SUCCESS mtime == the second call reused, not rebuilt

@@ -3,10 +3,9 @@ the last multi-second entries carrying only prose explanations:
 ``medallion_gold_sales_summary`` (~2.5 s idle warm) and the bench's
 ``medallion_pipeline`` (~2.6 s). Both are the reference's own flagship
 shape (etl_medallion.py:73-218): sequential layers of
-materialize-to-parquet statements, so the executor-side rung method of
-tools/report_attribution.py applies directly — cumulative partial
-chains for the corpus gate, per-statement walls for the fixture
-pipeline.
+materialize-to-parquet statements, so an executor-side rung method
+applies directly — cumulative partial chains for the corpus gate,
+per-statement walls for the fixture pipeline.
 
 Rung design:
 
