@@ -341,14 +341,6 @@ def time_medallion(spark) -> tuple[float, float]:
 
 
 def main() -> None:
-    # Pin gates off for timing: a pin-gated entry otherwise collects
-    # its live result to the driver and returns a literal table, so
-    # the noop materialization would time collect+compare instead of
-    # the live plan — which both breaks r1-r8 comparability for those
-    # entries and hides a plan regression's cost from the bench. The
-    # driver's CORRECTNESS pass runs without this env, so the gates
-    # stay fully exercised where they matter.
-    os.environ["ETL_GCP_SPARK_DISABLE_PINS"] = "1"
     # Sitting metadata (r11 verdict ask #4): inter-sitting pin drift
     # (~15% on an idle box, NOTES r11 addendum) made the idle-sitting
     # check a PROCEDURAL discipline — record loadavg + wall timestamps

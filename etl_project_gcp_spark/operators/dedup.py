@@ -404,7 +404,7 @@ def minhash_near_duplicates(
     and the verify branch (r16) scores candidate pairs straight on the
     arrays — ``jaccard_verify_arrays`` replaced the exploded-row
     verify (explode → repartition barrier → (id, sh) join → groupBy):
-    identical pair sets (tools/jaccard_arrays_probe.py equality gate)
+    identical pair sets (NOTES.md round 16 equality gate)
     at 0.70× the wall time at sf0.1, and fewer/lighter exchanges at
     scale (each doc's array ships once per join side instead of every
     shingle as its own row). Recomputing the cheap narrow shingle
@@ -1080,7 +1080,7 @@ def ngram_jaccard_pairs(
     the exploded-row verify's explode + repartition barrier + (id, sh)
     join + groupBy collapse into two id-keyed joins and one native
     ``array_intersect`` per pair. Identical pair sets
-    (tools/jaccard_arrays_probe.py), 0.82× wall at sf0.1."""
+    (NOTES.md round 16), 0.82× wall at sf0.1."""
     return jaccard_verify_arrays(
         pairs, shingle_arrays(docs, id_col, text_col, n), id_col, threshold
     )
@@ -1159,9 +1159,8 @@ def connected_components(
 
     ``stats`` (optional caller-supplied dict) is filled with
     ``{"edges": n, "path": "driver"|"distributed", "rounds": r}``
-    (rounds on the distributed path only) — how tools/cc_probe.py
-    measures rounds-to-convergence instead of asserting it by
-    argument (r9 verdict ask #2).
+    (rounds on the distributed path only) — how rounds-to-convergence
+    is measured instead of asserted by argument (NOTES.md round 10).
     """
     # Materialize the PAIR list once, then the symmetrized edge list:
     # the undirected union below references the pair plan twice, and the

@@ -826,7 +826,7 @@ def duplicated_spans(
     functions are interpreted, no subexpression elimination) —
     O(n_tokens²/stride) per doc. The r12 100× probe scaled doc COUNT
     at fixed length, which a per-doc-quadratic term passes; the
-    doc-LENGTH axis (tools/span_stage_probe.py, constant total
+    doc-LENGTH axis (NOTES.md round 15, constant total
     tokens) shows it: staged/base 0.84 → 0.34 → 0.27 at 250/1000/4000
     tokens per doc, outputs equality-gated, gate-shape (short docs)
     a wash. Same shingle_arrays precedent as dedup.py.
@@ -1128,7 +1128,7 @@ def _bpe_distributed_rounds(
     grows by one :func:`_apply_merge` fold per round — cheap to
     re-evaluate on a vocab-bounded table — while each checkpoint is a
     full materialization job the loop otherwise pays num_merges times.
-    Interleaved A/B at sf0.1, 12 merges (tools/bpe_cadence_probe.py):
+    Interleaved A/B at sf0.1, 12 merges (NOTES.md round 15):
     cadence 1 (old) 3.56 s / cadence 4 3.06 s / cadence 12 3.57 s
     median — the cadence-12 loss shows the growing-plan term is real,
     so the cadence stays small rather than unbounded. Merge tables

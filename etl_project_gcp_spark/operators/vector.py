@@ -93,7 +93,7 @@ def brute_force_topk(
     dot fold per pair); predicates off the partition key cannot cross
     a Window. Under desc NULLS LAST every null ranks strictly after
     every non-null, so rank-then-drop emits identical rows with
-    identical rk (equality-gated in tools/norm_hoist_probe.py; A/B
+    identical rk (equality-gated, NOTES.md round 15; A/B
     0.64 at the 2000×64 gate corpus, 0.58 at 40k×64). Same double
     arithmetic tree — scores are bit-identical.
     """

@@ -136,10 +136,12 @@ def merge_into_partitioned(
     3. ``merge_upsert`` the slice with the updates
        (``allow_schema_evolution`` plumbed through — a new column in
        the batch lands as NULLs on historical rows).
-    4. Write back under ``spark.sql.sources.partitionOverwriteMode=
-       dynamic``: Spark replaces exactly the partitions present in the
-       merged slice; every other partition's files are untouched on
-       disk (asserted byte-for-byte in tests/test_incremental.py).
+    4. Write back with the writer option
+       ``partitionOverwriteMode=dynamic`` (this write only; the session
+       conf is never touched): Spark replaces exactly the partitions
+       present in the merged slice; every other partition's files are
+       untouched on disk (asserted byte-for-byte in
+       tests/test_incremental.py).
 
     Bootstrap: a missing/empty ``target_path`` (first batch — e.g. the
     opening micro-batch of ``streaming_merge_upsert``) CREATES the
@@ -188,13 +190,9 @@ def merge_into_partitioned(
         target_slice, updates, key_cols,
         allow_schema_evolution=allow_schema_evolution,
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (merged.write.mode("overwrite")
-               .partitionBy(*partition_cols).parquet(target_path))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (merged.write.mode("overwrite")
+           .option("partitionOverwriteMode", "dynamic")
+           .partitionBy(*partition_cols).parquet(target_path))
     return parts
 
 

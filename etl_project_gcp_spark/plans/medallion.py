@@ -231,7 +231,7 @@ class MedallionPipeline:
         batch of new/changed silver sales rows, via dynamic partition
         overwrite — the measured scale regime for a calendar pipeline.
 
-        Why this exists (tools/medallion_span_probe.py, NOTES r14): the
+        Why this exists (NOTES.md round 14, gold partition-count axis): the
         full-rewrite gold path pays FileOutputCommitter v1's
         single-threaded O(D) commit loop — ~12-18.5 ms per leaf dir,
         measured to 870 dirs — while dynamic single-partition overwrite
@@ -365,15 +365,9 @@ def refresh_partitions(
             f"derivation disagree"
         )
     if present:
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (slice_df.write.mode("overwrite")
-                     .partitionBy(*partition_cols).parquet(target_path))
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        (slice_df.write.mode("overwrite")
+                 .option("partitionOverwriteMode", "dynamic")
+                 .partitionBy(*partition_cols).parquet(target_path))
     emptied = [
         t for t in touched
         if tuple(t[c] for c in partition_cols) not in present

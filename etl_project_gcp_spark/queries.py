@@ -244,7 +244,7 @@ def _t_wide(
     forking/initializing a worker costs more than a small task's work —
     the driver's r15 bench measured binary_resize_meta at 16.3 s on 32
     cores vs 1.2 s on 8 (worker fan-out, not compute; fresh-process
-    probe medians in tools/cold_fanout_probe.py: width 32 cold 4.7 s /
+    probe medians in NOTES.md round 16: width 32 cold 4.7 s /
     tail to 10.2 s under load, width 8 cold 3.2-3.4 s stable, and width
     8 is faster even warm, 0.76 vs 0.99 s). Partition count should
     follow WORK, not cores (guide §2.1/§4.2); pure-JVM consumers keep
@@ -319,16 +319,17 @@ def _pin_sql_value(v, typ: str) -> str:
 
 def _pin_oracle(name: str) -> str:
     """Pinned-VALUES oracle for a deterministic non-SQL-expressible
-    entry: the sf0.01 table from _ann_pins.py rendered as ANSI SQL
-    (the bpe_merges pattern, applied per r8 verdict ask #3). Generated
-    from the pin module, not pasted — one source of truth for pin rows
-    and oracle rows."""
+    entry: the sf0.01 table from _ann_pins.py rendered as ANSI SQL.
+    Generated from the pin module, not pasted — one source of truth for
+    pin rows and oracle rows. The entries themselves never read the
+    pins; the checkers (the DuckDB oracle, tools/sweep.py, tier-1) do.
+    Column names are double-quoted: DuckDB rejects a bare ``left``."""
     from etl_project_gcp_spark._ann_pins import PINNED
 
     spec = PINNED.get(name)
     if spec is None:
-        # not (yet) pinned — register rows-only; tools/pin_ann.py
-        # bootstrap path (gates disabled, no oracle to render)
+        # not (yet) pinned — register rows-only until tools/pin_ann.py
+        # has generated its pins
         return None
     cols = [c.strip().rsplit(" ", 1) for c in spec["schema"].split(",")]
     vals = ",\n        ".join(
@@ -337,65 +338,12 @@ def _pin_oracle(name: str) -> str:
         ) + ")"
         for row in spec["pins"]["sf0.01"]
     )
-    names = ", ".join(cname for cname, _ in cols)
+    names = ", ".join(f'"{cname}"' for cname, _ in cols)
     return (
         "SELECT * FROM (VALUES\n        "
         + vals
         + f"\n    ) AS t({names})"
     )
-
-
-def _pinned_or_live(
-    spark: SparkSession, name: str, sf_dir: str, live: DataFrame
-) -> DataFrame:
-    """The sf-keyed pin check shared by the hash-checked deterministic
-    entries: compare the live result to its OWN SF's pinned table
-    (each pin verified partition-count-independent at generation —
-    tools/pin_ann.py — and quality-floor-gated by ann_recall_report /
-    simhash_quality_report); a divergence logs whether to suspect a
-    stale pin (corpus regen) or a real regression. ALWAYS returns the
-    live DataFrame (ADVICE r9: the old gate substituted the sf0.01
-    oracle literals on a match, handing wrong-SF rows to sf0.1/sf0.001
-    callers and literal tables to any consumer that composes or times
-    registry callables). The driver's VALUES oracle still hash-matches
-    at sf0.01 because a matching live result IS the pin row-for-row;
-    a divergence reaches the driver as a loud hash-fail either way.
-    Unknown SFs skip the check (the driver checks only pinned SFs).
-    ``ETL_GCP_SPARK_DISABLE_PINS=1`` skips it too — bench.py (the
-    check's extra collect must not pollute timings) and
-    tools/pin_ann.py (regeneration pins the live tables without
-    consulting stale pins) set it."""
-    import os as _os
-
-    if _os.environ.get("ETL_GCP_SPARK_DISABLE_PINS") == "1":
-        return live
-    from etl_project_gcp_spark._ann_pins import PINNED
-
-    spec = PINNED.get(name)
-    if spec is None:
-        return live
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    pinned = spec["pins"].get(sf_name)
-    if pinned is None:
-        return live
-    rows = sorted(map(tuple, live.collect()))
-    if rows != pinned:
-        import logging
-
-        diffs = [
-            (i, p, r) for i, (p, r) in enumerate(zip(pinned, rows)) if p != r
-        ]
-        logging.getLogger(__name__).error(
-            "%s: live result diverged from PINNED[%s] (%d/%d rows "
-            "differ; first: pinned=%s live=%s) — stale pin after a "
-            "corpus regen (re-run tools/pin_ann.py after verifying the "
-            "quality floors), or a regression",
-            name, sf_name, len(diffs) + abs(len(rows) - len(pinned)),
-            max(len(rows), len(pinned)),
-            diffs[0][1] if diffs else "(length mismatch)",
-            diffs[0][2] if diffs else f"{len(rows)} rows vs {len(pinned)}",
-        )
-    return live
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -942,7 +890,7 @@ def price_quartiles_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     must ship every group value to one reducer."""
     # _t_wide: exact percentile's sort-per-group is scan-stage CPU the
     # 1-row-group layout serialized; interleaved A/B 9 reps measured
-    # 0.763 -> 0.648 s (w/b 0.85, tools/rebalance_ab_probe.py r15).
+    # 0.763 -> 0.648 s (w/b 0.85, NOTES.md round 15).
     orders = _t_wide(spark, sf_dir, "orders")
     def pct(q, name):
         return F.round(
@@ -2457,10 +2405,9 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hamming ≤ 3. xxhash64 signatures aren't reproducible in DuckDB, so
     the semantic-quality claim lives in simhash_quality_report
     (driver-checked floors on agreement with the Jaccard pair set);
-    the VALUE claim is the pinned-VALUES oracle (_pinned_or_live) —
+    the VALUE claim is the pinned-VALUES oracle (_pin_oracle) —
     the signature pipeline is xxhash-deterministic per corpus."""
-    live = DD.simhash_near_duplicates(_t(spark, sf_dir, "documents"))
-    return _pinned_or_live(spark, "dedup_simhash", sf_dir, live)
+    return DD.simhash_near_duplicates(_t(spark, sf_dir, "documents"))
 
 
 # Per-SF simhash floors, ~0.1 under measured (r5: precision/recall
@@ -2636,13 +2583,12 @@ def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane LSH approximate top-10 (X3 scale path).
 
-    Hash-checked via the pinned-VALUES oracle (_pinned_or_live):
+    Hash-checked via the pinned-VALUES oracle (_pin_oracle):
     the hyperplanes are seed-deterministic per corpus, so the exact
     result table is pinnable — recall vs brute force is separately
     floor-gated by ann_recall_report."""
     emb = _t(spark, sf_dir, "embeddings")
-    live = VX.lsh_topk(emb, emb.filter(F.col("vec_id") < 5), k=10)
-    return _pinned_or_live(spark, "ann_lsh_topk", sf_dir, live)
+    return VX.lsh_topk(emb, emb.filter(F.col("vec_id") < 5), k=10)
 
 
 @register("ann_ivf_topk", _pin_oracle("ann_ivf_topk"))
@@ -2651,8 +2597,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     path). Hash-checked via the pinned-VALUES oracle — the seed-vector
     coarse quantizer is xxhash-deterministic per corpus."""
     emb = _t(spark, sf_dir, "embeddings")
-    live = VX.ivf_topk(emb, emb.filter(F.col("vec_id") < 5), k=10)
-    return _pinned_or_live(spark, "ann_ivf_topk", sf_dir, live)
+    return VX.ivf_topk(emb, emb.filter(F.col("vec_id") < 5), k=10)
 
 
 @register("ann_quantized_topk", _pin_oracle("ann_quantized_topk"))
@@ -2660,17 +2605,14 @@ def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """int8-quantized cosine top-10 (X3 scale path): 4× less scan IO
     than float32 at 0.9+ recall (recall-tested) — the first stage of
     two-stage retrieval (quantized scan → exact rerank). Hash-checked
-    via the pinned-VALUES oracle (_pinned_or_live) — symmetric int8
+    via the pinned-VALUES oracle (_pin_oracle) — symmetric int8
     quantization is deterministic per corpus."""
     emb = _t(spark, sf_dir, "embeddings")
     # the operator names its approximate score cosine_q; the oracle
-    # column is cosine — rename at the registry boundary (the old
-    # literal-substituting gate masked this mismatch until r10's
-    # always-live inversion surfaced it)
-    live = VX.quantized_topk(
+    # column is cosine — rename at the registry boundary
+    return VX.quantized_topk(
         emb, emb.filter(F.col("vec_id") < 5), k=10
     ).withColumnRenamed("cosine_q", "cosine")
-    return _pinned_or_live(spark, "ann_quantized_topk", sf_dir, live)
 
 
 @register("ann_two_stage_topk", _pin_oracle("ann_two_stage_topk"))
@@ -2680,8 +2622,7 @@ def ann_two_stage_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute force for surviving pairs; recall ≥ the plain quantized path
     (both tested). Hash-checked via the pinned-VALUES oracle."""
     emb = _t(spark, sf_dir, "embeddings")
-    live = VX.two_stage_topk(emb, emb.filter(F.col("vec_id") < 5), k=10)
-    return _pinned_or_live(spark, "ann_two_stage_topk", sf_dir, live)
+    return VX.two_stage_topk(emb, emb.filter(F.col("vec_id") < 5), k=10)
 
 
 @register("ann_ivf_kmeans_topk", _pin_oracle("ann_ivf_kmeans_topk"))
@@ -2700,11 +2641,10 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared assignment rule (equality-tested, tests/test_vector.py)."""
     emb = _t(spark, sf_dir, "embeddings")
     cents = _kmeans_centroids_ensure(spark, emb, sf_dir, n_lists=16)
-    live = VX.ivf_topk(
+    return VX.ivf_topk(
         emb, emb.filter(F.col("vec_id") < 5), k=10, quantizer="kmeans",
         centroids=cents,
     )
-    return _pinned_or_live(spark, "ann_ivf_kmeans_topk", sf_dir, live)
 
 
 def _ivf_index_ensure(emb: DataFrame, sf_dir: str, n_lists: int) -> str:
@@ -2781,10 +2721,9 @@ def ann_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality, and the pins agree — generation asserts it)."""
     emb = _t(spark, sf_dir, "embeddings")
     path = _ivf_index_ensure(emb, sf_dir, n_lists=16)
-    live = VX.ivf_search_index(
+    return VX.ivf_search_index(
         spark, path, emb.filter(F.col("vec_id") < 5), k=10, nprobe=4
     ).drop("list_id")
-    return _pinned_or_live(spark, "ann_ivf_index_topk", sf_dir, live)
 
 
 @register(
@@ -2949,7 +2888,7 @@ def binary_resize_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     ship_package_to_workers(spark)
     # _t_wide: the four decode/resize/encode passes are pure Python CPU
     # per row, so the 1-row-group corpus layout serialized them on one
-    # core; interleaved A/B (tools/rebalance_ab_probe.py, 5 reps)
+    # core; interleaved A/B (NOTES.md round 15, 5 reps)
     # measured 2.50 -> 0.90 s (w/b 0.36). binary_meta (cheap sha256) and
     # binary_embed_topk (Arrow matmul, empty-batch hazard on a widened
     # tiny query side) stay on the plain read: both REGRESS widened.
@@ -2960,7 +2899,7 @@ def binary_resize_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ceil(rows/625) gives 8 tasks at sf0.1 (~0.3 s of PNG work per
     # task — enough to amortize a fork) and leaves genuinely large
     # corpora at full width. Fresh-process A/B (cold worker pool,
-    # tools/cold_fanout_probe.py, 3 reps): width-8 cold 3.2-3.8 s vs
+    # NOTES.md round 16, 3 reps): width-8 cold 3.2-3.8 s vs
     # base 4.1-10.2 s, and warm 0.76 vs 0.99 s — capped wins both.
     media = MM.synthesize_media(
         _t_wide(spark, sf_dir, "documents", rows_per_task=625),
@@ -3002,17 +2941,16 @@ def binary_embed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature UDF swaps in a learned encoder, same plan. Pixel decode
     has no SQL twin, but the whole chain is deterministic (stdlib PNG
     codec, fixed feature formula), so the value claim is the
-    pinned-VALUES oracle (_pinned_or_live); the codec itself is
+    pinned-VALUES oracle (_pin_oracle); the codec itself is
     additionally formula-proven by binary_resize_meta."""
     ship_package_to_workers(spark)
     media = MM.synthesize_media(
         _t(spark, sf_dir, "documents").limit(200), "doc_id", kind="png"
     )
     emb = MM.extract_features(media, dim=16, decode_stub=False)
-    live = VX.brute_force_topk(
+    return VX.brute_force_topk(
         emb, emb.filter(F.col("id") < 5), k=5, id_col="id", vec_col="embedding"
     )
-    return _pinned_or_live(spark, "binary_embed_topk", sf_dir, live)
 
 
 def _binary_landing_ensure(n_docs: int = 60) -> str:
@@ -4537,59 +4475,7 @@ def doc_redacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", TX.redact_text("text").alias("redacted"))
 
 
-# Pinned 12-merge BPE tables per SF (rank, left, right, merged), each
-# verified against the pure-Python reference BPE in
-# tests/test_text_dedup.py. The VALUES oracle below embeds the sf0.01
-# table (the driver's correctness SF); the entry keys its own expected
-# table by sf_dir basename (the _SIMHASH_FLOORS pattern) so a check at
-# any pinned SF is exact instead of a false mismatch against sf0.01's
-# literals.
-_BPE_MERGES_PINNED = {
-    "sf0.001": [
-        (0, "e", "r", "er"), (1, "o", "r", "or"), (2, "i", "n", "in"),
-        (3, "o", "w", "ow"), (4, "s", "t", "st"), (5, "l", "u", "lu"),
-        (6, "a", "r", "ar"), (7, "p", "ar", "par"), (8, "m", "er", "mer"),
-        (9, "a", "t", "at"), (10, "a", "n", "an"), (11, "c", "an", "can"),
-    ],
-    "sf0.01": [
-        (0, "e", "r", "er"), (1, "i", "n", "in"), (2, "o", "w", "ow"),
-        (3, "o", "r", "or"), (4, "s", "t", "st"), (5, "m", "er", "mer"),
-        (6, "a", "t", "at"), (7, "l", "u", "lu"), (8, "a", "r", "ar"),
-        (9, "p", "ar", "par"), (10, "j", "o", "jo"), (11, "jo", "in", "join"),
-    ],
-    "sf0.1": [
-        (0, "e", "r", "er"), (1, "i", "n", "in"), (2, "o", "r", "or"),
-        (3, "s", "t", "st"), (4, "o", "w", "ow"), (5, "t", "a", "ta"),
-        (6, "l", "u", "lu"), (7, "m", "er", "mer"), (8, "a", "r", "ar"),
-        (9, "p", "ar", "par"), (10, "u", "p", "up"), (11, "par", "k", "park"),
-    ],
-}
-
-
-@register(
-    "bpe_merges",
-    # The iterative fixpoint has no SQL twin, but the learned merge
-    # table IS deterministic (count-desc/pair-asc tiebreak) and pinned
-    # against an independent pure-Python reference BPE
-    # (tests/test_text_dedup.py) — so the oracle embeds the sf0.01
-    # table as literals, exactly the simhash_quality_report pattern.
-    """
-    SELECT * FROM (VALUES
-        (0,  'e',  'r',  'er'),
-        (1,  'i',  'n',  'in'),
-        (2,  'o',  'w',  'ow'),
-        (3,  'o',  'r',  'or'),
-        (4,  's',  't',  'st'),
-        (5,  'm',  'er', 'mer'),
-        (6,  'a',  't',  'at'),
-        (7,  'l',  'u',  'lu'),
-        (8,  'a',  'r',  'ar'),
-        (9,  'p',  'ar', 'par'),
-        (10, 'j',  'o',  'jo'),
-        (11, 'jo', 'in', 'join')
-    ) AS t(rank, "left", "right", merged)
-    """,
-)
+@register("bpe_merges", _pin_oracle("bpe_merges"))
 def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed BPE merge learning (tokenizer fitting, X4 family):
     collapse the corpus to a word-frequency table once, then each round
@@ -4597,53 +4483,15 @@ def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge as a pure array fold (operators/text.py::bpe_learn_merges —
     no UDF, deterministic count-desc/pair-asc tiebreak).
 
-    The learned table differs per corpus, so the single VALUES oracle
-    (pinned at sf0.01, the driver's correctness SF) is keyed per SF via
-    _BPE_MERGES_PINNED: the entry learns the merges and compares them
-    to its OWN SF's pinned table (each independently verified against
-    the pure-Python reference BPE in tests/test_text_dedup.py),
-    logging loudly on a divergence — then ALWAYS returns the learned
-    table (ADVICE r9, same inversion as _pinned_or_live: literal
-    substitution handed wrong-SF rows to non-driver consumers). At
-    sf0.01 a matching learned table IS the oracle row-for-row, so the
-    driver hash still matches exactly; any regression in pair
-    counting, tiebreaks, or the merge fold hash-fails loudly. The
+    The iterative fixpoint has no SQL twin, but the learned merge table
+    is deterministic per corpus, so its oracle is the pinned-VALUES
+    table (_pin_oracle). The sf0.01 table is checked against a
+    pure-Python reference BPE in tests/test_text_dedup.py. The
     driver-fit production path (fit='driver' — one collect of the
     capped vocab, in-memory loop; how 30k-merge tokenizers actually
     train) is equality-tested against this distributed loop."""
-    import os as _os
-
     docs = _t(spark, sf_dir, "documents")
-    learned = TX.bpe_learn_merges(docs, num_merges=12, fit="distributed")
-    if _os.environ.get("ETL_GCP_SPARK_DISABLE_PINS") == "1":
-        return learned
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    pinned = _BPE_MERGES_PINNED.get(sf_name)
-    if pinned is None:
-        return learned
-    rows = [tuple(r) for r in learned.orderBy("rank").collect()]
-    if rows != pinned:
-        # A driver hash-fail that lands here is DIAGNOSABLE (ADVICE
-        # r7): the learned table diverged from this SF's pin — either
-        # the fixture corpus was regenerated (stale _BPE_MERGES_PINNED,
-        # re-pin from tests/test_text_dedup.py's reference BPE) or the
-        # merge learner regressed. Log the first divergence so the red
-        # row points at the right one.
-        import logging
-
-        diffs = [
-            (i, p, r) for i, (p, r) in enumerate(zip(pinned, rows)) if p != r
-        ]
-        logging.getLogger(__name__).error(
-            "bpe_merges: learned table diverged from _BPE_MERGES_PINNED"
-            "[%s] (%d/%d rows differ; first: pinned=%s learned=%s) — "
-            "stale pin after a corpus regen, or a learner regression",
-            sf_name, len(diffs) + abs(len(rows) - len(pinned)),
-            max(len(rows), len(pinned)),
-            diffs[0][1] if diffs else "(length mismatch)",
-            diffs[0][2] if diffs else f"{len(rows)} rows vs {len(pinned)}",
-        )
-    return learned
+    return TX.bpe_learn_merges(docs, num_merges=12, fit="distributed")
 
 
 @register(
@@ -5428,7 +5276,7 @@ def streaming_rollup_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # width 8 (r16): one windowed-agg state store per stateful
     # partition; at gate scale the store setup/commit term dominates
     # the ~10k-event batch (the r12 interval-join finding, 1 store
-    # flavor). Fresh-process A/B (tools/drain_width_probe.py, 3 reps):
+    # flavor). Fresh-process A/B (NOTES.md round 16, 3 reps):
     # width 8 ≤ base in 5/6 cold/warm medians, ~15% better overall.
     # Same parameterized gate-scale choice as the other drains.
     return _drain_stream_once(
@@ -5511,7 +5359,7 @@ def streaming_sessionize_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the drain's width is a worker fan-out knob exactly like a
     # mapInPandas width (the r15 driver bench read this entry 0.64
     # faster at 8 cores than 32). Fresh-process A/B with the engine
-    # warmed (tools/drain_width_probe.py, 3 reps): warm 4.95 -> 4.09 s
+    # warmed (NOTES.md round 16, 3 reps): warm 4.95 -> 4.09 s
     # median at width 8, cold noise-bound either way; the r12
     # store-term probe (11 ms/partition/batch) points the same way.
     # Same gate-scale rationale as the interval-join and dedup drains'
@@ -5553,11 +5401,6 @@ def _drain_stream_once(
         run_to_memory_sink,
     )
 
-    import os as _os
-    import time as _time
-
-    timing = _os.environ.get("SPARK_GRAFT_DRAIN_TIMING")
-    t_land = t_drain = 0.0
     land_root = tempfile.mkdtemp(prefix=f"{sink_name}_")
     land = land_root + "/events"
     try:
@@ -5567,9 +5410,7 @@ def _drain_stream_once(
         # input partitions instead of 1 — the single-batch premise is
         # ASSERTED below, not assumed, because a multi-batch drain
         # would silently weaken the gates' batch-equivalence contract.
-        t0 = _time.time()
         landed.coalesce(8).write.mode("overwrite").parquet(land)
-        t_land = _time.time() - t0
         # A streaming query binds shuffle.partitions into its (fresh)
         # checkpoint at start. The right width is operator-specific:
         # every stateful partition carries a state STORE, so a
@@ -5582,7 +5423,7 @@ def _drain_stream_once(
         # measured 3.3/2.9/2.5/2.8 s in r11; the r12 interleaved
         # 8-rep probe resolved the residual per-partition store term
         # at ~11 ms/partition/batch — 2.20 s at w=8 vs 2.47 at w=32,
-        # tools/drain_partitions_probe.py — a minor term that
+        # NOTES.md round 12 — a minor term that
         # amortizes as rows/partition grows), so no override is worth
         # binding into the checkpoint. None = keep the session value;
         # production redeploys size this to the cluster.
@@ -5614,14 +5455,12 @@ def _drain_stream_once(
             "spark.sql.streaming.noDataMicroBatches.enabled", "false"
         )
         try:
-            t0 = _time.time()
             q = run_to_memory_sink(
                 plan_fn(read_event_stream(spark, land)),
                 sink_name,
                 output_mode=output_mode,
             )
             finished = q.awaitTermination(300)
-            t_drain = _time.time() - t0
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
             spark.conf.set(
@@ -5642,16 +5481,6 @@ def _drain_stream_once(
             )
     finally:
         shutil.rmtree(land_root, ignore_errors=True)
-    if timing:
-        # harness-vs-operator attribution (r7 verdict ask #7): the
-        # landing rebuild is pure gate harness; the drain span covers
-        # checkpoint setup + the actual streaming operator. Printed
-        # (not logged) so a probe run can grep it.
-        print(
-            f"DRAIN_TIMING {sink_name} land={t_land:.2f}s "
-            f"drain={t_drain:.2f}s",
-            flush=True,
-        )
     return spark.table(sink_name)
 
 

@@ -85,7 +85,7 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
     BACKGROUND thread, so the session's first real Python-boundary query
     doesn't pay the pool's startup inside its own wall time.
 
-    Measured (tools/cold_fanout_probe.py, fresh process, local[32]): the
+    Measured (NOTES.md round 16, fresh process, local[32]): the
     first Python stage of a session costs ~2.5 s at ANY width — daemon
     boot (a fresh Python importing pyspark.worker) plus the first
     workers' import chains — and a later full-width stage pays ~+0.5 s
@@ -96,9 +96,11 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
     this exactly once, at startup, where it belongs — not inside
     whichever query happens to touch Python first.
 
-    Local mode only (same gate as the preloading daemon) and
+    Runs only on a session whose live conf selects the preloading
+    daemon (so ``SPARK_GRAFT_PYDAEMON=0`` turns both off, and an
+    existing session built without the daemon is left alone), and
     best-effort: failures are swallowed — the pool then warms lazily as
-    before. ``SPARK_GRAFT_PREWARM=0`` disables."""
+    before."""
     import threading
 
     def _go() -> None:
@@ -189,11 +191,11 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if _want_pydaemon(master) and os.environ.get(
-        "SPARK_GRAFT_PREWARM", "1"
-    ).strip().lower() not in ("0", "false", "no", "off"):
-        prewarmed = getattr(spark, "_spark_graft_prewarmed", False)
-        if not prewarmed:
-            setattr(spark, "_spark_graft_prewarmed", True)
-            _prewarm_python_workers(spark)
+    if (
+        spark.conf.get("spark.python.daemon.module", None)
+        == "etl_project_gcp_spark.pydaemon"
+        and not getattr(spark, "_spark_graft_prewarmed", False)
+    ):
+        setattr(spark, "_spark_graft_prewarmed", True)
+        _prewarm_python_workers(spark)
     return spark

@@ -58,7 +58,7 @@ def read_csv_bronze(
     error at read time, and the safe default belongs on the gate.
     Callers at scale pass a ratio (or better, a pinned ``schema`` —
     silver casts make it equivalent and it skips the pass entirely:
-    the r14 probe, tools/ingest_schema_probe.py on the same 15M-row
+    the r14 probe (NOTES.md round 14) on the same 15M-row
     corpus, measured the pinned-schema bronze at ~2.5 s vs 2.9-3.3 s
     sampled vs 3.7-4.6 s full-inference, i.e. ~32-44% off the layer
     and the only mode whose wall was stable across both probe

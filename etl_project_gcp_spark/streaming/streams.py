@@ -188,7 +188,7 @@ def stateful_sessionize(
     def close_out(uid: int, sessions):
         # ONE frame for ALL of a group's closed sessions: building a
         # 1-row DataFrame per session and pd.concat-ing them cost ~2.1 s
-        # of the 5.4 s sf0.1 drain (tools/drain_attribution.py, r11) —
+        # of the 5.4 s sf0.1 drain (NOTES.md round 11) —
         # frame construction is pandas' per-call overhead, not data.
         import pandas as pd
 
@@ -336,7 +336,7 @@ def streaming_interval_join(
     reach below the streaming symmetric-hash join, so un-projected
     inputs buffer their dead columns (``value``, ``props``, ...) in
     BOTH sides' state stores — measured 2.54 -> 2.16 s (~15%) on the
-    sf0.1 drain (tools/interval_join_attribution.py, r12). The output
+    sf0.1 drain (NOTES.md round 12). The output
     contract is a fixed column set, so the projection is always safe.
     """
     cols = [key_col, ts_col, "event_id"]

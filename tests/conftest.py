@@ -13,6 +13,20 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECTNESS = "/root/testdata/sf0.01"
 
 
+@pytest.fixture(scope="session", autouse=True)
+def _artifact_cache_dir(tmp_path_factory):
+    """Artifact entries build into a per-session directory, never into
+    the user's cache (~/.cache/etl_gcp_spark): every run exercises the
+    build path, and a suite run leaves the user's cache as it found it.
+    A test that monkeypatches the variable still overrides it."""
+    mp = pytest.MonkeyPatch()
+    mp.setenv(
+        "ETL_GCP_SPARK_CACHE_DIR", str(tmp_path_factory.mktemp("artifacts"))
+    )
+    yield
+    mp.undo()
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = get_spark(app_name="etl_project_gcp_spark-tests")

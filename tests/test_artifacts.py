@@ -21,6 +21,15 @@ def cache(tmp_path, monkeypatch):
     return root
 
 
+def test_suite_cache_root_is_per_session(tmp_path_factory):
+    """Without a test's own override, artifact entries run by the suite
+    build under pytest's basetemp (tests/conftest.py), never in the
+    user's ~/.cache/etl_gcp_spark."""
+    root = A._cache_root("ivf")
+    assert root.startswith(str(tmp_path_factory.getbasetemp()) + os.sep)
+    assert not root.startswith(os.path.expanduser("~/.cache/etl_gcp_spark"))
+
+
 def _write(p, data: bytes) -> None:
     os.makedirs(os.path.dirname(p), exist_ok=True)
     with open(p, "wb") as f:

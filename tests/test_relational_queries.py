@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_project_gcp_spark import queries as Q
+from etl_project_gcp_spark._ann_pins import PINNED
 from tests.oracle import compare
 
 ORACLE_CHECKED = sorted(Q.oracle_sql().keys())
@@ -20,6 +21,14 @@ def test_query_matches_oracle(spark, sf01_dir, name):
     fn = Q.queries()[name]
     sql = Q.oracle_sql()[name]
     compare(fn(spark, sf01_dir), sql, sf01_dir)
+
+
+@pytest.mark.parametrize("name", sorted(PINNED))
+def test_pinned_entry_matches_own_sf_pin(spark, sf_dir, name):
+    """The pinned oracles render sf0.01 only; at the smoke SF each
+    pinned entry's live rows must equal that SF's own pin."""
+    rows = sorted(map(tuple, Q.queries()[name](spark, sf_dir).collect()))
+    assert rows == PINNED[name]["pins"][sf_dir.rstrip("/").rsplit("/", 1)[-1]]
 
 
 def test_entry_smoke(spark):

@@ -79,11 +79,33 @@ def test_prewarm_runs_once_per_session(spark):
     must not re-fire on every get_spark() call (it marks the session)."""
     from etl_project_gcp_spark.session import get_spark
 
-    if os.environ.get("SPARK_GRAFT_PREWARM", "").strip() == "0":
-        pytest.skip("prewarm explicitly disabled in this environment")
     assert getattr(spark, "_spark_graft_prewarmed", False) is True
     # idempotent: a repeat call returns the same session, still marked,
     # without spawning another prewarm (the flag short-circuits it)
     again = get_spark(app_name="prewarm-idempotence-check")
     assert again is spark
     assert getattr(again, "_spark_graft_prewarmed", False) is True
+
+
+def test_prewarm_skips_existing_session_without_pydaemon(monkeypatch):
+    """get_spark may hand back a session someone else built. The prewarm
+    follows that session's LIVE conf, not what get_spark would have
+    configured: without the preloading daemon it must not fire."""
+    from types import SimpleNamespace
+
+    from pyspark.sql import SparkSession
+
+    from etl_project_gcp_spark import session as S
+
+    started = []
+    monkeypatch.setattr(S, "_prewarm_python_workers", started.append)
+    monkeypatch.delenv("SPARK_GRAFT_PYDAEMON", raising=False)
+    monkeypatch.delenv("SPARK_MASTER", raising=False)
+    plain = SimpleNamespace(
+        conf={}, sparkContext=SimpleNamespace(setLogLevel=lambda level: None)
+    )
+    monkeypatch.setattr(
+        SparkSession.Builder, "getOrCreate", lambda self: plain
+    )
+    assert S.get_spark(master="local[2]") is plain
+    assert started == []

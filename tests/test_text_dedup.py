@@ -801,8 +801,10 @@ def test_bpe_merges_entry_is_sf_keyed(spark, sf_dir):
     inversion — the driver's sf0.01 check still hash-matches because
     a matching learned table IS the oracle row-for-row)."""
     from etl_project_gcp_spark import queries as Q
+    from etl_project_gcp_spark._ann_pins import PINNED
     from etl_project_gcp_spark.operators import text as TX
 
+    pins = PINNED["bpe_merges"]["pins"]
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     learned = [
         tuple(r)
@@ -810,21 +812,23 @@ def test_bpe_merges_entry_is_sf_keyed(spark, sf_dir):
         .orderBy("rank")
         .collect()
     ]
-    assert learned == Q._BPE_MERGES_PINNED["sf0.001"]
+    assert learned == pins["sf0.001"]
     # the corpora genuinely diverge — the keying is load-bearing
-    assert learned != Q._BPE_MERGES_PINNED["sf0.01"]
+    assert learned != pins["sf0.01"]
     got = [
         tuple(r)
         for r in Q.queries()["bpe_merges"](spark, sf_dir).orderBy("rank").collect()
     ]
-    assert got == Q._BPE_MERGES_PINNED["sf0.001"]
+    assert got == pins["sf0.001"]
 
 
 def test_bpe_merges_entry_unknown_sf_returns_learned(spark, tmp_path):
     """An unpinned corpus must surface the raw learned table (loud
     hash-fail at the driver, never a silently-borrowed sf0.01 literal)."""
     from etl_project_gcp_spark import queries as Q
+    from etl_project_gcp_spark._ann_pins import PINNED
 
+    pins = PINNED["bpe_merges"]["pins"]
     docs = spark.createDataFrame(
         [(1, "zig zag zig zag"), (2, "zig zag zoo")], "doc_id int, text string"
     )
@@ -835,8 +839,8 @@ def test_bpe_merges_entry_unknown_sf_returns_learned(spark, tmp_path):
         .orderBy("rank")
         .collect()
     ]
-    assert str(tmp_path).rsplit("/", 1)[-1] not in Q._BPE_MERGES_PINNED
-    assert got and got != Q._BPE_MERGES_PINNED["sf0.01"]
+    assert str(tmp_path).rsplit("/", 1)[-1] not in pins
+    assert got and got != pins["sf0.01"]
     # genuinely learned from the toy corpus: counts tie at 3 for
     # (a,g),(i,g),(z,a),(z,i) → pair-asc tiebreak picks (a,g)
     assert got[0][1:] == ("a", "g", "ag")

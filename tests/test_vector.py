@@ -355,42 +355,6 @@ def test_zero_norm_vectors_are_excluded_not_ranked_first(spark):
     assert all(99 not in (r.a, r.b) for r in pairs)
 
 
-def test_ann_pin_gate_always_returns_live_and_logs_divergence(
-    spark, monkeypatch, caplog
-):
-    """ADVICE r9 inversion: the pin gate is a divergence CHECK, not a
-    substitution. A matching live result comes back as the live table
-    (own-SF rows — composition- and timing-safe for every non-driver
-    consumer), and a corrupted pin (stands in for any retrieval
-    regression) ALSO returns the live table, with the
-    stale-pin-vs-regression diagnostic logged so the driver hash-fail
-    stays diagnosable."""
-    import copy
-    import logging
-
-    from etl_project_gcp_spark import _ann_pins, queries as Q
-
-    sf = "/root/testdata/sf0.001"
-    qs = Q.queries()
-    out = sorted(map(tuple, qs["ann_ivf_topk"](spark, sf).collect()))
-    assert out == _ann_pins.PINNED["ann_ivf_topk"]["pins"]["sf0.001"]
-
-    broken = copy.deepcopy(_ann_pins.PINNED)
-    q0, n0, c0, rk0 = broken["ann_ivf_topk"]["pins"]["sf0.001"][0]
-    broken["ann_ivf_topk"]["pins"]["sf0.001"][0] = (q0, n0 + 1, c0, rk0)
-    monkeypatch.setattr(_ann_pins, "PINNED", broken)
-    with caplog.at_level(
-        logging.ERROR, logger="etl_project_gcp_spark.queries"
-    ):
-        diverged = sorted(
-            map(tuple, qs["ann_ivf_topk"](spark, sf).collect())
-        )
-    assert diverged == out  # the live table, not the broken pin
-    assert any(
-        "diverged from PINNED" in r.getMessage() for r in caplog.records
-    )
-
-
 def test_ann_pins_partition_count_independent(spark, tmp_path, monkeypatch):
     """The property the pins rely on (tools/pin_ann.py re-asserts it
     at regeneration): the same corpus yields byte-identical ANN tables
@@ -416,7 +380,7 @@ def test_ann_pins_partition_count_independent(spark, tmp_path, monkeypatch):
     from etl_project_gcp_spark._ann_pins import PINNED
 
     # the live table at 3 shuffle partitions equals the own-SF pin —
-    # partition independence for real, via the gate's live return
+    # partition independence for real
     for n, rows in got.items():
         assert rows == PINNED[n]["pins"]["sf0.001"], n
 

@@ -71,7 +71,6 @@ def main() -> int:
               "— rerun when quiet; this probe exists to EXCLUDE load noise")
         return 1
 
-    os.environ["ETL_GCP_SPARK_DISABLE_PINS"] = "1"
     from etl_project_gcp_spark import queries as Q
     from etl_project_gcp_spark.session import get_spark
 

@@ -37,29 +37,31 @@ PINNED_ENTRIES = {
     "binary_embed_topk":
         "query_id long, neighbor_id long, cosine double, rk int",
     "dedup_simhash": "a long, b long, hamming int",
+    "bpe_merges": "rank int, left string, right string, merged string",
 }
 SFS = ("sf0.001", "sf0.01", "sf0.1")
 
 _DOCSTRING = '''"""Pinned result tables for the deterministic-but-non-
-SQL-expressible entries (r8 verdict ask #3, extended r9 to the whole
-rows-only set).
+SQL-expressible entries: the ANN top-k family, ``dedup_simhash`` and
+``bpe_merges``.
 
 Every pinned path is deterministic per corpus (seeded hyperplanes,
-xxhash-seeded quantizers/signatures, stdlib PNG codec), so the
-rows-only driver check upgrades to a full value oracle with the
-sf-keyed pinned-VALUES pattern that made ``bpe_merges`` and
-``simhash_quality_report`` hash-green: each entry's result table is
-pinned here per SF, verified at generation time to be identical under
-16- and 7-shuffle-partition runs (partition-count independence) and
-quality-floor-gated against exact references by ``ann_recall_report``
-/ ``simhash_quality_report``. The registry entries compare their live
-result to their OWN SF's pin, log a stale-pin-vs-regression
-diagnostic on a divergence, and ALWAYS return the live table (ADVICE
-r9 — literal substitution handed wrong-SF rows to non-driver
-consumers): at sf0.01 a matching live table IS the VALUES oracle
-row-for-row, so the driver check is an exact hash compare, and any
-regression in hashing, probing, pruning, or tiebreaks hash-fails
-loudly (the queries.py::bpe_merges discipline).
+xxhash-seeded quantizers/signatures, stdlib PNG codec, count-desc /
+pair-asc BPE tiebreak), so each entry's result table is pinned here
+per SF, verified at generation time to be identical under 16- and
+7-shuffle-partition runs (partition-count independence). The ANN and
+simhash tables are also quality-floor-gated against exact references
+by ``ann_recall_report`` / ``simhash_quality_report``; the sf0.01 BPE
+table against a pure-Python reference BPE in tests/test_text_dedup.py.
+
+The registry entries never read these pins: they return their live
+result. The checkers compare it:
+  - the DuckDB oracle at sf0.01 (``queries._pin_oracle`` renders the
+    sf0.01 table as a VALUES literal);
+  - ``tools/sweep.py`` at the other scale factors (live rows against
+    the same SF's pin);
+  - tier-1 at sf0.001 (tests/test_relational_queries.py, every pinned
+    entry against its sf0.001 pin).
 
 Regenerating after an intentional corpus/testdata change:
     python tools/pin_ann.py   (asserts partition independence first)
@@ -69,10 +71,7 @@ Regenerating after an intentional corpus/testdata change:
 def _collect(parts: int) -> dict:
     import tempfile
 
-    # bypass the entries' own pin gates: regeneration must pin the
-    # LIVE tables, never the gates' sf0.01 literals
-    os.environ["ETL_GCP_SPARK_DISABLE_PINS"] = "1"
-    # ...and give EACH partition-count run its own artifact cache:
+    # give EACH partition-count run its own artifact cache:
     # the kmeans centroids / persisted IVF index / binary landing are
     # disk-cached per corpus, so without this the 7-partition pass
     # would silently REUSE artifacts built at 16 partitions and the

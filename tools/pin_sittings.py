@@ -48,7 +48,6 @@ def main() -> int:
         print(f"container not idle (loadavg {load0:.1f} > {args.max_load})")
         return 1
 
-    os.environ["ETL_GCP_SPARK_DISABLE_PINS"] = "1"
     from etl_project_gcp_spark import queries as Q
     from etl_project_gcp_spark.session import get_spark
 

@@ -5,8 +5,8 @@ Usage: python tools/plan_capture.py <out_dir> [suffix] [name ...]
 Writes <out_dir>/<name>_<suffix>.txt (suffix default "before") for each
 requested entry (default: all). Entries whose construction *executes*
 work (streaming drains, medallion builds) still capture the plan of the
-returned DataFrame — for those, the construction-side cost is profiled
-by the dedicated tools/ probes, not by this dump.
+returned DataFrame — for those, the construction-side cost is measured
+by ``perfbench --trace 1``, not by this dump.
 """
 
 from __future__ import annotations
@@ -30,7 +30,6 @@ def main() -> None:
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     only = set(sys.argv[3:])
     os.makedirs(out_dir, exist_ok=True)
-    os.environ["ETL_GCP_SPARK_DISABLE_PINS"] = "1"
     spark = get_spark(app_name="plan_capture")
     registry = Q.queries()
     for name, fn in registry.items():

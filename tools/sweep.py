@@ -63,13 +63,11 @@ def main() -> int:
     if args.first:
         names = names[: args.first]
 
-    # The pinned-VALUES oracle family (_ann_pins.PINNED + bpe_merges)
-    # renders its DuckDB oracle from the sf0.01 pins ONLY — comparing a
-    # non-sf0.01 live result against it is apples-to-oranges by
-    # construction. Those entries carry per-SF pins, so at other pinned
-    # SFs the sweep compares the live rows against the SAME SF's pinned
-    # table instead (a real check; _pinned_or_live only LOGS there,
-    # since the driver's loud fail is the sf0.01 oracle).
+    # The pinned-VALUES oracle family (_ann_pins.PINNED) renders its
+    # DuckDB oracle from the sf0.01 pins ONLY — comparing a non-sf0.01
+    # live result against it is apples-to-oranges by construction.
+    # Those entries carry per-SF pins, so at other pinned SFs the sweep
+    # compares the live rows against the SAME SF's pinned table.
     from etl_project_gcp_spark._ann_pins import PINNED
 
     sf_name = args.sf_dir.rstrip("/").rsplit("/", 1)[-1]
@@ -93,11 +91,6 @@ def main() -> int:
                     f"{len(rows)} rows vs {len(pinned)} pinned"
                 )
                 status = f"pass (pinned@{sf_name})"
-            elif sf_name != "sf0.01" and name == "bpe_merges":
-                # self-gated: the entry itself raises on divergence
-                # from _BPE_MERGES_PINNED at any pinned SF
-                df.collect()
-                status = f"pass (self-gated pins@{sf_name})"
             elif sf_name != "sf0.01" and name == "simhash_quality_report":
                 # live per-SF metrics with per-SF floors; the VALUES
                 # oracle embeds the sf0.01 numbers only. The check at
