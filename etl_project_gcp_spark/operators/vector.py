@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from etl_project_gcp_spark.session import map_concurrent
+
 
 def _dot(a: F.Column, b: F.Column) -> F.Column:
     """Sequential double dot-product of two array<double> columns."""
@@ -1117,8 +1119,6 @@ def recall_report(
     A path returning zero overlap still reports (meets_floor=false),
     never absence.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     floors = dict(RECALL_FLOORS if floors is None else floors)
     # every swept method needs a floor BEFORE any search launches — a
     # caller-supplied dict missing one otherwise dies on a bare
@@ -1190,8 +1190,7 @@ def recall_report(
             for r in build().select("query_id", "neighbor_id").collect()
         }
 
-    with ThreadPoolExecutor(len(searches)) as ex:
-        got = dict(ex.map(_pairs, searches.items()))
+    got = dict(map_concurrent(_pairs, searches.items()))
     truth = got.pop("truth")
     rows = []
     for m in sorted(got):

@@ -12,7 +12,9 @@ Re-homes the reference's BigQuery SQL lifecycle onto Spark:
 Contract preserved from the reference (:62-71, :316-321): each statement
 reports success independently; a layer's success is the AND of its
 statements; the pipeline halts at the first failed LAYER but still
-attempts every statement within a layer.
+attempts every statement within a layer. The statements of one layer
+do not read each other, so they run concurrently; the next layer starts
+only after all of them have finished.
 
 Scale notes: every layer materializes as Parquet (lineage truncation +
 restartability — SURVEY §4.1); gold sales_summary is partitioned by
@@ -29,6 +31,8 @@ in joins so the fact table never shuffles.
 from __future__ import annotations
 
 import logging
+from collections.abc import Callable
+from contextlib import suppress
 from dataclasses import dataclass, field
 from functools import reduce
 
@@ -40,13 +44,20 @@ from etl_project_gcp_spark.functions import (
     money_round,
     normalize_email,
 )
-from etl_project_gcp_spark.sources.readers import read_csv_bronze
+from etl_project_gcp_spark.session import map_concurrent
+from etl_project_gcp_spark.sources.readers import (
+    read_csv_bronze,
+    read_parquet_memo,
+)
 
 log = logging.getLogger(__name__)
 
 BRONZE_TABLES = ("employees", "products", "sales")
 SILVER_TABLES = ("employees", "products", "sales")
 GOLD_TABLES = ("sales_analytics", "product_metrics", "sales_summary")
+
+# One statement of a layer: its plan builder and its partition columns.
+_Build = tuple[Callable[[], DataFrame], list[str] | None]
 
 
 @dataclass
@@ -71,7 +82,10 @@ class MedallionPipeline:
         return f"{self.warehouse}/{layer}/{table}"
 
     def table(self, layer: str, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(layer, table))
+        """The table as a DataFrame, through the session's table-read
+        memo: an unchanged table needs no schema-inference job, and an
+        overwrite re-keys it (new part-file names)."""
+        return read_parquet_memo(self.spark, self.path(layer, table))
 
     def _write(self, df: DataFrame, layer: str, table: str,
                partition_by: list[str] | None = None) -> None:
@@ -80,36 +94,46 @@ class MedallionPipeline:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(self.path(layer, table))
 
+    def _run_layer(self, layer: str, builds: dict[str, _Build]) -> LayerResult:
+        """Write a layer's independent statements concurrently, one
+        thread each (``builds``: table -> (plan builder, partition
+        columns)). Each statement reports its own success and a failed
+        one does not stop its siblings (etl_medallion.py:62-71,
+        :100-101); ``statement_success`` keeps ``builds`` order. A
+        written table is read back in its own thread, so the next
+        layer's reads hit the table memo instead of paying the schema
+        inference on the layer barrier."""
+
+        def run(table: str) -> bool:
+            build, partition_by = builds[table]
+            try:
+                self._write(build(), layer, table, partition_by)
+            except Exception as e:  # per-statement failure, keep going
+                log.error("%s %s failed: %.100s", layer, table, e)
+                return False
+            # A table that cannot be read back (e.g. a partitioned write
+            # of zero rows) raises again at its reader.
+            with suppress(Exception):
+                self.table(layer, table)
+            return True
+
+        return LayerResult(layer, dict(zip(builds, map_concurrent(run, builds))))
+
     # -- bronze (etl_medallion.py:73-103) ---------------------------------
     def bronze_layer(self, sources: dict[str, str]) -> LayerResult:
         """Strict CSV → Parquet load per table, schema autodetect."""
-        res = LayerResult("bronze")
-        for table in BRONZE_TABLES:
-            try:
-                df = read_csv_bronze(self.spark, sources[table])
-                self._write(df, "bronze", table)
-                res.statement_success[table] = True
-            except Exception as e:  # per-statement failure, keep going (:100-101)
-                log.error("bronze %s failed: %.100s", table, e)
-                res.statement_success[table] = False
-        return res
+        return self._run_layer("bronze", {
+            t: (lambda t=t: read_csv_bronze(self.spark, sources[t]), None)
+            for t in BRONZE_TABLES
+        })
 
     # -- silver (etl_medallion.py:105-149) --------------------------------
     def silver_layer(self) -> LayerResult:
-        res = LayerResult("silver")
-        ops = {
-            "employees": self._silver_employees,
-            "products": self._silver_products,
-            "sales": self._silver_sales,
-        }
-        for table, fn in ops.items():
-            try:
-                self._write(fn(), "silver", table)
-                res.statement_success[table] = True
-            except Exception as e:
-                log.error("silver %s failed: %.100s", table, e)
-                res.statement_success[table] = False
-        return res
+        return self._run_layer("silver", {
+            "employees": (self._silver_employees, None),
+            "products": (self._silver_products, None),
+            "sales": (self._silver_sales, None),
+        })
 
     def _silver_employees(self) -> DataFrame:
         """7-column cleanse (etl_medallion.py:116-126): TRIM names,
@@ -139,20 +163,11 @@ class MedallionPipeline:
 
     # -- gold (etl_medallion.py:151-218) ----------------------------------
     def gold_layer(self) -> LayerResult:
-        res = LayerResult("gold")
-        ops = {
+        return self._run_layer("gold", {
             "sales_analytics": (self._gold_sales_analytics, None),
             "product_metrics": (self._gold_product_metrics, None),
             "sales_summary": (self._gold_sales_summary, ["year", "month"]),
-        }
-        for table, (fn, part) in ops.items():
-            try:
-                self._write(fn(), "gold", table, partition_by=part)
-                res.statement_success[table] = True
-            except Exception as e:
-                log.error("gold %s failed: %.100s", table, e)
-                res.statement_success[table] = False
-        return res
+        })
 
     def _gold_sales_analytics(self) -> DataFrame:
         """12-col 3-way left-join projection (etl_medallion.py:161-178).

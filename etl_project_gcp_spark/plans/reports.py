@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_project_gcp_spark.plans.medallion import MedallionPipeline
+from etl_project_gcp_spark.session import map_concurrent
 
 
 def top_products(pipe: MedallionPipeline, k: int = 5) -> DataFrame:
@@ -50,9 +51,16 @@ def top_departments(pipe: MedallionPipeline, k: int = 5) -> DataFrame:
 
 
 def sample_reports(pipe: MedallionPipeline, n: int = 3) -> dict:
-    """First-n rows of each report (etl_medallion.py:387-391 shape)."""
-    return {
-        "top_products": [r.asDict() for r in top_products(pipe).limit(n).collect()],
-        "sales_by_channel": [r.asDict() for r in sales_by_channel(pipe).limit(n).collect()],
-        "top_departments": [r.asDict() for r in top_departments(pipe).limit(n).collect()],
+    """First-n rows of each report (etl_medallion.py:387-391 shape).
+    The three reports are independent, so they are collected
+    concurrently."""
+    reports = {
+        "top_products": top_products,
+        "sales_by_channel": sales_by_channel,
+        "top_departments": top_departments,
     }
+
+    def first_rows(report) -> list[dict]:
+        return [r.asDict() for r in report(pipe).limit(n).collect()]
+
+    return dict(zip(reports, map_concurrent(first_rows, reports.values())))

@@ -29,7 +29,11 @@ from etl_project_gcp_spark.exact import oavg as _oavg
 from etl_project_gcp_spark.exact import oround as _oround
 from etl_project_gcp_spark.exact import osum_round as _osumr
 from etl_project_gcp_spark.operators import relational as R
-from etl_project_gcp_spark.session import ship_package_to_workers
+from etl_project_gcp_spark.session import map_concurrent, ship_package_to_workers
+from etl_project_gcp_spark.sources.readers import (  # noqa: F401
+    _TABLE_MEMO_ATTR,  # re-exported: callers inspect a session's memo here
+    read_parquet_memo,
+)
 
 QuerieFn = Callable[[SparkSession, str], DataFrame]
 
@@ -69,84 +73,14 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     ship_package_to_workers(spark)
 
 
-# Attribute under which each session carries its own path-keyed plan
-# dict. Stored ON the SparkSession instance, not in a module-level map
-# (ADVICE r12: a flat dict held strong session refs until the >256
-# wholesale clear — and a WeakKeyDictionary cannot fix that here,
-# because the cached DataFrames reference their session, and WKD
-# values that reach their key keep the entry alive per the weakref
-# docs). Instance storage makes the cache's lifetime exactly the
-# session's: drop/stop the session, its plans go with it.
-_TABLE_MEMO_ATTR = "_spark_graft_table_memo"
-
-
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Table scan, memoized per (session, path, stat-key).
-
-    ``spark.read.parquet`` resolves the footer schema eagerly —
-    measured ~100 ms per table per call — and every registry entry
+    """Corpus table scan through the session's table-read memo
+    (:func:`sources.readers.read_parquet_memo`): every registry entry
     rebuilds its plan per run (the bench and driver contract), so an
-    un-memoized read taxed EVERY timed run ~0.1-0.6 s of identical
-    driver-side re-resolution (r12 construction sweep: plain 3-join
-    TPC-H entries paid 0.3-0.6 s per BUILD before any execution).
-
-    Contract edges (each pinned by tests/test_catalog_sources.py):
-    - URI-scheme paths (gs://, s3a://, hdfs://, file:) BYPASS the memo
-      untouched — os.path.abspath would mangle the scheme, and a local
-      stat cannot key remote state anyway; Spark handles them as
-      before.
-    - The key carries inode+size+mtime_ns of the dataset path AND, for
-      directory datasets, every descendant's (relpath, size, mtime_ns)
-      via a recursive scandir walk (_dir_stat_key; ADVICE r12 — a
-      part-file content edit updates the file's mtime but not the
-      directory's, so the old directory-only stat served stale plans
-      for in-place child edits; ADVICE r13 widened the walk to nested
-      partition subdirectories, where a single-level scan had the same
-      blind spot). An overwrite that recreates the directory/file
-      invalidates via the new inode even on a filesystem whose mtime
-      granularity is coarser than the rewrite gap; the one remaining
-      undetectable window is an in-place same-inode edit inside a
-      single filesystem mtime tick (nanosecond resolution here).
-    - A missing path falls through to a fresh read so Spark still
-      raises its normal PATH_NOT_FOUND.
-    - The cache dict lives ON the session OBJECT (not in a module map,
-      and not keyed by applicationId): sibling spark.newSession()
-      handles share an application but not conf state, a cached plan
-      executes under the session that read it, and a dropped/stopped
-      session releases all its cached plans with itself (ADVICE r12 —
-      the flat strong-ref dict kept stopped sessions alive until the
-      wholesale clear; a WeakKeyDictionary can't fix that because the
-      cached DataFrames reference their session, pinning the entry).
-    DataFrames are immutable logical plans, so sharing one instance
-    across entries/threads is safe; the dict-set race is benign (last
-    writer wins, both values equivalent)."""
-    import os
-    import re
-
+    un-memoized read would tax every timed run with identical
+    driver-side footer resolution."""
     _ensure_session_confs(spark)
-    raw = f"{sf_dir}/{name}.parquet"
-    if re.match(r"^[A-Za-z][A-Za-z0-9+.-]*:", raw):
-        return spark.read.parquet(raw)
-    path = os.path.abspath(raw)
-    try:
-        st = os.stat(path)
-    except OSError:
-        return spark.read.parquet(path)
-    stat_key = _dir_stat_key(path, st)
-    if stat_key is None:  # vanished mid-scan: let Spark raise normally
-        return spark.read.parquet(path)
-    key = (path, stat_key)
-    cache = getattr(spark, _TABLE_MEMO_ATTR, None)
-    if cache is None:
-        cache = {}
-        setattr(spark, _TABLE_MEMO_ATTR, cache)
-    df = cache.get(key)
-    if df is None:
-        if len(cache) > 256:  # rewritten-fixture keys accrue
-            cache.clear()
-        df = spark.read.parquet(path)
-        cache[key] = df
-    return df
+    return read_parquet_memo(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _parquet_layout(
@@ -2454,17 +2388,14 @@ def simhash_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut almost no time (5.4 vs 6.0 s — overhead, not data, dominates)
     while shrinking the pair sets ~4x and destabilizing the floors.
     Measured ~3 s warm."""
-    from concurrent.futures import ThreadPoolExecutor
-
     docs = _t_wide(spark, sf_dir, "documents")
 
     def _pairs(fn):
         return {(r.a, r.b) for r in fn(docs).select("a", "b").collect()}
 
-    with ThreadPoolExecutor(2) as ex:
-        sim_f = ex.submit(_pairs, DD.simhash_near_duplicates)
-        jac_f = ex.submit(_pairs, DD.minhash_near_duplicates)
-        sim, jac = sim_f.result(), jac_f.result()
+    sim, jac = map_concurrent(
+        _pairs, (DD.simhash_near_duplicates, DD.minhash_near_duplicates)
+    )
     n_inter = len(sim & jac)
     sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     floors = _SIMHASH_FLOORS.get(sf_name, _SIMHASH_FLOORS_DEFAULT)
@@ -2765,8 +2696,6 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     this entry runs that report and the pixel gate CONCURRENTLY, so
     wall-clock tracks the slower of the two. Measured 8.1 → ~2.5-3 s
     warm at sf0.1, values unchanged."""
-    from concurrent.futures import ThreadPoolExecutor
-
     ship_package_to_workers(spark)
     emb = _t(spark, sf_dir, "embeddings")
     path = _ivf_index_ensure(emb, sf_dir, n_lists=16)
@@ -2800,11 +2729,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
         return (len(got & ref) / len(ref)) if ref else 0.0
 
-    with ThreadPoolExecutor(2) as ex:
-        rep_f = ex.submit(_report)
-        pix_f = ex.submit(_pixel)
-        rep_rows = rep_f.result()
-        pixel_recall = pix_f.result()
+    rep_rows, pixel_recall = map_concurrent(lambda f: f(), (_report, _pixel))
     rows = [(r.method, r.recall_floor, r.meets_floor) for r in rep_rows]
     rows.append(("pixel", 0.90, pixel_recall >= 0.90))
     return spark.createDataFrame(
@@ -5114,21 +5039,16 @@ def quality_model_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical layout whatever the session width, and MLlib save/load
     is bit-exact, so the VALUES oracle asserts exact rows either way.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     docs = _t_wide(spark, sf_dir, "documents")
     feats = MQ.quality_features(docs).localCheckpoint()
     gen_cols = [c for c in MQ.FEATURE_COLS if c != "stopword_hit_ratio"]
     # the two ensure calls are independent — interleave their (many
     # small) MLlib jobs on a cold cache, same lever as the other
     # report gates; on a warm cache both are metadata reads
-    with ThreadPoolExecutor(2) as ex:
-        distill_f = ex.submit(_quality_model_ensure, feats, sf_dir, "distill")
-        gen_f = ex.submit(
-            _quality_model_ensure, feats, sf_dir, "gen", gen_cols
-        )
-        model, auc = distill_f.result()
-        _, gen_auc = gen_f.result()
+    (model, auc), (_, gen_auc) = map_concurrent(
+        lambda args: _quality_model_ensure(feats, sf_dir, *args),
+        (("distill",), ("gen", gen_cols)),
+    )
     s1 = MQ.score_quality(feats, model).withColumnRenamed(
         "quality_prob", "p1"
     )

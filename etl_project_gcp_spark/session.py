@@ -16,11 +16,20 @@ Scale notes (100 TB design stance):
 
 from __future__ import annotations
 
+import atexit
 import os
 import tempfile
+import warnings
 import zipfile
+from collections.abc import Callable, Iterable
+from concurrent.futures import ThreadPoolExecutor
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
+
+_T = TypeVar("_T")
+_R = TypeVar("_R")
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -44,11 +53,14 @@ def ship_package_to_workers(spark: SparkSession) -> None:
     # per-session file, not a fixed shared name: concurrent drivers (or
     # different users) on one host would clobber each other's zip and
     # ship stale code to executors
-    fd, zip_path = tempfile.mkstemp(
+    zip_file = tempfile.NamedTemporaryFile(
         prefix="etl_project_gcp_spark_pkg_", suffix=".zip"
     )
-    os.close(fd)
-    with zipfile.ZipFile(zip_path, "w") as zf:
+    # Spark serves this file to executors for the life of the process;
+    # closing it at exit deletes it, so a driver process leaves no
+    # ~700 KB zip behind in the temp dir
+    atexit.register(zip_file.close)
+    with zipfile.ZipFile(zip_file, "w") as zf:
         for root, _dirs, files in os.walk(pkg_dir):
             if "__pycache__" in root:
                 continue
@@ -59,8 +71,29 @@ def ship_package_to_workers(spark: SparkSession) -> None:
                         "etl_project_gcp_spark", os.path.relpath(full, pkg_dir)
                     )
                     zf.write(full, rel)
-    spark.sparkContext.addPyFile(zip_path)
+    zip_file.flush()
+    spark.sparkContext.addPyFile(zip_file.name)
     _PKG_SHIPPED.add(sid)
+
+
+def map_concurrent(fn: Callable[[_T], _R], items: Iterable[_T]) -> list[_R]:
+    """``[fn(x) for x in items]``, one thread per item, results in item
+    order. Each worker runs under the calling thread's Spark local
+    properties (job group, job description, scheduler pool), so the jobs
+    it submits are attributed to the caller's group. A worker's
+    exception is raised here."""
+    items = list(items)
+    if len(items) < 2:
+        return [fn(x) for x in items]
+    with warnings.catch_warnings():
+        # the session-less form only skips Spark Connect session tags,
+        # which this engine does not use
+        warnings.filterwarnings(
+            "ignore", "Spark session is not provided", UserWarning
+        )
+        target = inheritable_thread_target(fn)
+    with ThreadPoolExecutor(len(items)) as ex:
+        return list(ex.map(target, items))
 
 
 def _want_pydaemon(master: str | None) -> bool:

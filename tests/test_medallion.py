@@ -311,34 +311,6 @@ def test_http_service_endpoints(pipeline):
     assert r.status_code == 200 and len(r.get_json()) >= 3
 
 
-def test_observed_write_single_pass_metrics(spark, tmp_path):
-    """observed_write: quality metrics accumulate during the write job
-    itself — values must equal a separate aggregation, with no second
-    scan issued by the helper."""
-    from pyspark.sql import Row
-    from pyspark.sql import functions as F
-
-    from etl_project_gcp_spark.plans.verify import observed_write
-
-    df = spark.createDataFrame(
-        [Row(id=1, v=10.0), Row(id=2, v=None), Row(id=None, v=3.5)],
-        "id int, v double",
-    )
-    path = str(tmp_path / "out")
-    got = observed_write(
-        df,
-        path,
-        {
-            "n_rows": F.count(F.lit(1)),
-            "null_ids": F.count_if(F.col("id").isNull()),
-            "null_vs": F.count_if(F.col("v").isNull()),
-            "max_v": F.max("v"),
-        },
-    )
-    assert got == {"n_rows": 3, "null_ids": 1, "null_vs": 1, "max_v": 10.0}
-    assert spark.read.parquet(path).count() == 3
-
-
 def test_corpus_gold_sales_summary_layers_and_partitioned_layout(
     spark, tmp_path
 ):

@@ -109,3 +109,53 @@ def test_prewarm_skips_existing_session_without_pydaemon(monkeypatch):
     )
     assert S.get_spark(master="local[2]") is plain
     assert started == []
+
+
+def test_map_concurrent_workers_inherit_job_group(spark):
+    """Jobs a map_concurrent worker submits belong to the caller's job
+    group, so they are attributed to the caller; results keep item
+    order and a worker's exception reaches the caller."""
+    from etl_project_gcp_spark.session import map_concurrent
+
+    sc = spark.sparkContext
+    sc.setJobGroup("map-concurrent-test", "inherit")
+    try:
+        counts = map_concurrent(lambda n: spark.range(n).count(), [3, 5, 7])
+        jobs = sc.statusTracker().getJobIdsForGroup("map-concurrent-test")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert counts == [3, 5, 7]
+    assert len(jobs) >= 3
+
+    def boom(x):
+        raise ValueError(x)
+
+    with pytest.raises(ValueError, match="b"):
+        map_concurrent(boom, ["b", "b"])
+
+
+def test_shipped_package_zip_removed_at_exit(tmp_path):
+    """ship_package_to_workers zips the package into the temp dir; the
+    zip is gone once the driver process exits."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import glob, os, tempfile\n"
+        "from etl_project_gcp_spark.session import get_spark, "
+        "ship_package_to_workers\n"
+        "spark = get_spark(master='local[1]')\n"
+        "ship_package_to_workers(spark)\n"
+        "print(len(glob.glob(os.path.join(tempfile.gettempdir(), "
+        "'etl_project_gcp_spark_pkg_*.zip'))))\n"
+    )
+    env = dict(os.environ, TMPDIR=str(tmp_path), SPARK_GRAFT_PYDAEMON="0")
+    proc = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, env=env,
+        capture_output=True, text=True, timeout=180,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert proc.stdout.split()[-1] == "1", proc.stdout
+    assert list(tmp_path.glob("etl_project_gcp_spark_pkg_*.zip")) == []

@@ -12,10 +12,13 @@ Usage: python tools/sweep.py [--first N] [--names a,b,c] [--sf-dir DIR]
 from __future__ import annotations
 
 import argparse
+import atexit
 import importlib.util
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 import traceback
 
@@ -34,6 +37,15 @@ def main() -> int:
     # shuffle partition count (partition-order independence)
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     args = ap.parse_args()
+
+    if not os.environ.get("ETL_GCP_SPARK_CACHE_DIR"):
+        # Artifact entries build into a fresh directory, never into the
+        # user's cache (~/.cache/etl_gcp_spark): every sweep exercises
+        # the build path at the scale factor it checks, and leaves the
+        # user's cache as it found it. A caller-set directory is kept.
+        cache = tempfile.mkdtemp(prefix="sweep_artifacts_")
+        atexit.register(shutil.rmtree, cache, ignore_errors=True)
+        os.environ["ETL_GCP_SPARK_CACHE_DIR"] = cache
 
     spec = importlib.util.spec_from_file_location(
         "spark_entry_under_sweep", os.path.join(REPO, "__spark_entry__.py")
