@@ -137,8 +137,9 @@ def read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
       executes under the session that read it, and a dropped/stopped
       session releases all its cached plans with itself.
     DataFrames are immutable logical plans, so sharing one instance
-    across callers/threads is safe; the dict-set race is benign (last
-    writer wins, both values equivalent)."""
+    across callers/threads is safe; the race of two threads reading
+    one uncached table is benign (last writer wins, both values
+    equivalent)."""
     if re.match(r"^[A-Za-z][A-Za-z0-9+.-]*:", path):
         return spark.read.parquet(path)
     abspath = os.path.abspath(path)
@@ -150,10 +151,10 @@ def read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
     if stat_key is None:  # vanished mid-scan: let Spark raise normally
         return spark.read.parquet(path)
     key = (abspath, stat_key)
-    cache = getattr(spark, _TABLE_MEMO_ATTR, None)
-    if cache is None:
-        cache = {}
-        setattr(spark, _TABLE_MEMO_ATTR, cache)
+    # one atomic setdefault: concurrent first reads on a session (a
+    # layer's writer threads) cannot each install a dict and so drop
+    # each other's entries
+    cache = vars(spark).setdefault(_TABLE_MEMO_ATTR, {})
     df = cache.get(key)
     if df is None:
         if len(cache) > 256:  # rewritten-table keys accrue

@@ -626,6 +626,46 @@ def test_table_read_memo_dies_with_session(spark, sf01_dir):
     del displacer
 
 
+def test_table_read_memo_concurrent_first_reads_all_kept(spark, sf01_dir):
+    """More threads than cores make a fresh session's first memo reads
+    at once, one table each, with a short switch interval: every table
+    must end up in the session's one memo dict (a thread that installed
+    its own dict would drop the others' entries)."""
+    import sys
+    import threading
+
+    from etl_project_gcp_spark.sources.readers import (
+        _TABLE_MEMO_ATTR,
+        CORPUS_TABLES,
+        read_parquet_memo,
+    )
+
+    sibling = spark.newSession()
+    paths = [f"{sf01_dir}/{t}.parquet" for t in CORPUS_TABLES]
+    start = threading.Barrier(len(paths))
+    got = {}
+
+    def read(path):
+        start.wait(timeout=60)
+        got[path] = read_parquet_memo(sibling, path)
+
+    threads = [threading.Thread(target=read, args=(p,)) for p in paths]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    cache = getattr(sibling, _TABLE_MEMO_ATTR)
+    assert len(got) == len(paths)
+    for df in got.values():
+        assert any(v is df for v in cache.values())
+
+
 def _simple_plan(df):
     return df._jdf.queryExecution().explainString(
         df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
